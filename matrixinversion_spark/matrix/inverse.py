@@ -9,8 +9,8 @@ Spark-first: triangular inversion is the block-recursive identity
     inv([[A,0],[C,D]]) = [[A⁻¹, 0], [−D⁻¹·C·A⁻¹, D⁻¹]]
     inv([[A,B],[0,D]]) = [[A⁻¹, −A⁻¹·B·D⁻¹], [0, D⁻¹]]
 
-with driver-local numpy leaves — each level costs two distributed
-matmuls; depth is log2(n/leaf). The full inverse is then
+with leaves inverted by ``ops.leaf_task`` — each level costs two
+distributed matmuls; depth is log2(n/leaf). The full inverse is then
 
     A⁻¹ = U⁻¹ · L⁻¹ · P
 
@@ -23,36 +23,25 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import functions as F
-
 from matrixinversion_spark.matrix import kernels
 from matrixinversion_spark.matrix.core import BlockMatrixFrame
 from matrixinversion_spark.matrix.lu import (
     DEFAULT_LEAF,
     _checkpoint,
     _concurrently,
+    _inv_leaf,
     _level_ck,
     auto_leaf,
     lu,
 )
-from matrixinversion_spark.matrix.ops import (
-    gemm,
-    inv_leaf_distributed as _inv_leaf_distributed,
-    leaf_inv_mode as _leaf_inv_mode,
-    multiply,
-)
+from matrixinversion_spark.matrix.ops import gemm, leaf_task, multiply
 
 
 def inverse_lower_unit(lo: BlockMatrixFrame,
                        leaf_size: int = DEFAULT_LEAF) -> BlockMatrixFrame:
     """Invert a distributed unit-lower-triangular matrix (O16)."""
-    spark = lo.df.sparkSession
     if lo.n_rows <= leaf_size or lo.nbi == 1:
-        if lo.local is None and _leaf_inv_mode() == "executor":
-            return _inv_leaf_distributed(lo, "lower")
-        return BlockMatrixFrame.from_numpy(
-            spark, kernels.inv_lower_unit(lo.to_numpy()), lo.block_size
-        )
+        return _inv_leaf(lo, "lower")
     mb = lo.nbi // 2
     a = lo.slice_blocks(0, mb, 0, mb)
     c = lo.slice_blocks(mb, lo.nbi, 0, mb)
@@ -70,13 +59,8 @@ def inverse_lower_unit(lo: BlockMatrixFrame,
 def inverse_upper(up: BlockMatrixFrame,
                   leaf_size: int = DEFAULT_LEAF) -> BlockMatrixFrame:
     """Invert a distributed upper-triangular matrix (O16)."""
-    spark = up.df.sparkSession
     if up.n_rows <= leaf_size or up.nbi == 1:
-        if up.local is None and _leaf_inv_mode() == "executor":
-            return _inv_leaf_distributed(up, "upper")
-        return BlockMatrixFrame.from_numpy(
-            spark, kernels.inv_upper(up.to_numpy()), up.block_size
-        )
+        return _inv_leaf(up, "upper")
     mb = up.nbi // 2
     a = up.slice_blocks(0, mb, 0, mb)
     b = up.slice_blocks(0, mb, mb, up.nbj)
@@ -91,92 +75,6 @@ def inverse_upper(up: BlockMatrixFrame,
     return BlockMatrixFrame(df, up.n_rows, up.n_cols, up.block_size)
 
 
-def _leaf_inv_frames(a: BlockMatrixFrame, retained: list | None = None
-                     ) -> tuple[BlockMatrixFrame, BlockMatrixFrame]:
-    """Factor AND invert a leaf inside one executor task, returning
-    (J, U⁻¹) with J ≡ L⁻¹·P — the pivot already folded into L⁻¹'s
-    columns (a free numpy gather while the matrix sits in task
-    memory).
-
-    This is the trick that makes the fused inverse recursion
-    (``_lu_inv_rec``) fully static: every pivot application the
-    two-sweep pipeline did at the dataflow level (permute_rows of A2,
-    of L2, and the final permute_cols) becomes an in-task column
-    shuffle here, so NO pivot vector ever crosses to the driver and
-    the recursion has no blocking collect — the entire inverse
-    executes as one Spark job whose stages overlap by data
-    dependency alone. P = diag(P_leaf…) is block-diagonal at leaf
-    granularity, so J keeps L⁻¹'s block-lower-triangular zero
-    structure (columns only shuffle WITHIN a leaf's column range) —
-    J blocks above the diagonal of a multi-block leaf can be nonzero,
-    hence tag 0 emits the full square while tag 1 (U⁻¹) keeps the
-    upper-triangle filter. Reference analogue: LUInverse.java's
-    mappers likewise invert triangular strips executor-side and
-    apply pivots by index indirection, never materializing P
-    (`LUInverse.java:88-167`, `Read_LU.java:66-92`)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    bs, n, m = a.block_size, a.n_rows, a.n_cols
-    schema = StructType(
-        [
-            StructField("tag", IntegerType()),
-            StructField("bi", IntegerType()),
-            StructField("bj", IntegerType()),
-            StructField("rows", IntegerType()),
-            StructField("cols", IntegerType()),
-            StructField("data", ArrayType(DoubleType())),
-        ]
-    )
-
-    def fac(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.zeros((n, m))
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(int(r), int(c))
-            mat[int(bi) * bs:int(bi) * bs + int(r),
-                int(bj) * bs:int(bj) * bs + int(c)] = blk
-        lu_packed, perm = kernels.ludcmp(mat)
-        lower, upper = kernels.split_lu(lu_packed)
-        jl = kernels.inv_lower_unit(lower)[:, np.argsort(perm)]
-        iu = kernels.inv_upper(upper)
-        out = []
-        for tag, tri in ((0, jl), (1, iu)):
-            for bi in range((n + bs - 1) // bs):
-                for bj in range((m + bs - 1) // bs):
-                    if tag == 1 and bi > bj:
-                        continue  # strict lower of U⁻¹ is zero
-                    blk = tri[bi * bs:(bi + 1) * bs,
-                              bj * bs:(bj + 1) * bs]
-                    out.append(
-                        (tag, bi, bj, blk.shape[0], blk.shape[1],
-                         np.ascontiguousarray(blk).ravel())
-                    )
-        return pd.DataFrame(
-            out, columns=["tag", "bi", "bj", "rows", "cols", "data"]
-        )
-
-    tagged = (
-        a.df.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(fac, schema)
-        .persist()
-    )
-    if retained is not None:
-        retained.append(tagged)
-    block_cols = ["bi", "bj", "rows", "cols", "data"]
-    jl = BlockMatrixFrame(
-        tagged.filter(F.col("tag") == 0).select(*block_cols), n, m, bs
-    )
-    iu = BlockMatrixFrame(
-        tagged.filter(F.col("tag") == 1).select(*block_cols), n, m, bs
-    )
-    return jl, iu
-
-
 def _lu_inv_rec(a: BlockMatrixFrame, leaf_size: int,
                 retained: list | None = None
                 ) -> tuple[BlockMatrixFrame, BlockMatrixFrame]:
@@ -186,12 +84,12 @@ def _lu_inv_rec(a: BlockMatrixFrame, leaf_size: int,
 
     The two-sweep pipeline (factor everything, THEN invert the
     assembled triangles, THEN un-pivot) walks the recursion twice,
-    pays separate single-task ``inv_leaf_distributed`` stages per
-    leaf, three permute stages per level, and — critically — blocks
-    the driver on a pivot collect per leaf. Here each leaf task
-    inverts its triangles AND folds its pivot in the same task that
-    factored them (``_leaf_inv_frames``), and each level combines the
-    child results with static block algebra only:
+    pays separate single-task inversion stages per leaf, three
+    permute stages per level, and — critically — blocks the driver on
+    a pivot collect per leaf. Here each leaf task inverts its
+    triangles AND folds its pivot in the same task that factored them
+    (``leaf_task`` running ``kernels.lu_inverse``), and each level
+    combines the child results with static block algebra only:
 
         U2 = J1·A2                L2 = A3·U1⁻¹      (solves become one
                                                     multiply: factors
@@ -213,18 +111,14 @@ def _lu_inv_rec(a: BlockMatrixFrame, leaf_size: int,
     dependency — leaf factorization, sibling solves, corner gemms all
     schedule concurrently wherever the DAG allows.
     """
-    spark = a.df.sparkSession
     bs = a.block_size
-    if a.n_rows <= leaf_size or a.nbi == 1:
-        if a.local is None and _leaf_inv_mode() == "executor":
-            return _leaf_inv_frames(a, retained)
-        lu_packed, perm = kernels.ludcmp(a.to_numpy())
-        lower, upper = kernels.split_lu(lu_packed)
-        jl = kernels.inv_lower_unit(lower)[:, np.argsort(perm)]
-        return (
-            BlockMatrixFrame.from_numpy(spark, jl, bs),
-            BlockMatrixFrame.from_numpy(spark, kernels.inv_upper(upper), bs),
-        )
+    n = a.n_rows
+    if n <= leaf_size or a.nbi == 1:
+        # the fold only moves columns within the leaf, but a
+        # multi-block leaf's J can be nonzero above its diagonal
+        jl, iu = leaf_task(a, kernels.lu_inverse,
+                           [(n, n, "full"), (n, n, "upper")], retained)
+        return jl, iu
 
     nb = a.nbi
     mb = nb // 2
@@ -233,16 +127,7 @@ def _lu_inv_rec(a: BlockMatrixFrame, leaf_size: int,
     a3 = a.slice_blocks(mb, nb, 0, mb)
     a4 = a.slice_blocks(mb, nb, mb, nb)
 
-    # Depth-aware lineage control (measured, N=2048/N=4096 A/B): at
-    # the LOWEST internal level the children are leaf task outputs —
-    # already persisted, two-step lineage — and localCheckpoint's
-    # serialized materialization jobs dominate the wall (7.8 -> 4.0 s
-    # median at N=2048 without them). One level up the opposite
-    # holds: without checkpoints the recursive plan triples Catalyst
-    # analysis time (4.7 -> 12.8 s plan-build at N=4096). So: plain
-    # persist when the children are leaves, checkpoint+persist above.
-    child_leaf = mb * a.block_size <= leaf_size or mb == 1
-    ck = (lambda m: m) if child_leaf else _checkpoint
+    ck = _level_ck(mb * bs <= leaf_size or mb == 1)
 
     jl1, iu1 = _lu_inv_rec(a1, leaf_size, retained)
     jl1 = ck(jl1).persist()
@@ -264,7 +149,6 @@ def _lu_inv_rec(a: BlockMatrixFrame, leaf_size: int,
     cl = gemm(multiply(jl3, l2), jl1, alpha=-1.0)
     iu_df = iu1.df.unionAll(cu.shift(0, mb)).unionAll(iu3.shift(mb, mb))
     jl_df = jl1.df.unionAll(cl.shift(mb, 0)).unionAll(jl3.shift(mb, mb))
-    n = a.n_rows
     return (
         BlockMatrixFrame(jl_df, n, n, bs),
         BlockMatrixFrame(iu_df, n, n, bs),
@@ -334,15 +218,8 @@ def _solve_upper_left(up: BlockMatrixFrame, b: BlockMatrixFrame,
                       leaf_size: int) -> BlockMatrixFrame:
     """Solve U·X = B for upper-triangular U (back substitution,
     recursive halving like lu.solve_lower)."""
-    from matrixinversion_spark.matrix.lu import _apply_left
-
     if up.n_rows <= leaf_size or up.nbi == 1:
-        if up.local is None and _leaf_inv_mode() == "executor":
-            # leaf factor is distributed: invert it in one executor
-            # task and solve as a join-gemm — no driver transfer at
-            # all (same shuffle count as the groupBy in _apply_left)
-            return multiply(_inv_leaf_distributed(up, "upper"), b)
-        return _apply_left(kernels.inv_upper(up.to_numpy()), b)
+        return multiply(_inv_leaf(up, "upper"), b)
     mb = up.nbi // 2
     ua = up.slice_blocks(0, mb, 0, mb)
     ub = up.slice_blocks(0, mb, mb, up.nbj)

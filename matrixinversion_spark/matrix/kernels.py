@@ -11,8 +11,10 @@ BLAS instead of Python-level row loops.
   reference pivots on the *signed* maximum (`LUDecomposition.java:63`,
   a quirk); we use the textbook absolute-value pivot and verify via
   residual properties rather than factor bit-matching (SURVEY.md §4).
-- ``solve_lower_unit`` / ``solve_upper``: blocked triangular solves
-  (used against leaf-sized factor blocks, broadcast to executors).
+- ``solve_lower_unit`` / ``solve_upper``: blocked triangular solves.
+- ``lu_factors`` / ``lu_inverse``: the two composite leaf kernels that
+  ``ops.leaf_task`` runs on a whole leaf — the factors with their
+  pivot row, and the pre-pivoted triangular inverses.
 """
 
 from __future__ import annotations
@@ -126,3 +128,21 @@ def inv_upper(upper: np.ndarray) -> np.ndarray:
     """Invert an upper-triangular matrix (LAPACK; see
     :func:`inv_lower_unit` for why not the blocked substitution)."""
     return np.linalg.inv(upper)
+
+
+def lu_factors(a: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Leaf LU: (L unit-lower, U upper, pivot row) with ``a[perm] =
+    L @ U``; the pivot is a 1×n float row so it travels as a block."""
+    lu, perm = ludcmp(a)
+    lower, upper = split_lu(lu)
+    return lower, upper, perm.astype(np.float64)[None, :]
+
+
+def lu_inverse(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Leaf LU plus triangular inversion: (J, U⁻¹) with J = L⁻¹·P, the
+    pivot folded into L⁻¹'s columns, so ``inv(a) = U⁻¹ @ J`` and no
+    pivot vector leaves the leaf (the reference likewise applies
+    pivots by index indirection, `Read_LU.java:66-92`)."""
+    lu, perm = ludcmp(a)
+    lower, upper = split_lu(lu)
+    return inv_lower_unit(lower)[:, np.argsort(perm)], inv_upper(upper)

@@ -16,9 +16,11 @@ Python over *logical* BlockMatrixFrame slices (block-coordinate
 filters — no partition directory trees, no control files); each level
 lowers to a handful of Spark jobs (one join-shuffle matmul + JVM
 subtract). Triangular solves are recursive too — halving splits down
-to a leaf where the factor is collect-and-broadcast (the reference's
-mappers likewise stream the ≤limit-sized diagonal factor,
-`LUDecomposition.java:470-487`).
+to a leaf whose factor is inverted by ``ops.leaf_task`` (in one
+executor task, or on the driver when the factor already lives there)
+and applied as one join-gemm (the reference's mappers likewise apply
+the ≤limit-sized diagonal factor, `LUDecomposition.java:470-487`).
+Leaf factorizations run through ``ops.leaf_task`` the same way.
 
 Lineage control: every level's Schur complement and factors are
 ``localCheckpoint``-ed — the recursive plan would otherwise grow
@@ -36,12 +38,9 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import functions as F
 
 from matrixinversion_spark.matrix import kernels, ops
-from matrixinversion_spark.matrix.core import BLOCK_SCHEMA, BlockMatrixFrame
+from matrixinversion_spark.matrix.core import BlockMatrixFrame
 from matrixinversion_spark.matrix.ops import gemm, multiply, permute_rows
 
 DEFAULT_LEAF = 1024  # reference runs limit=1000 (`run.csh:13`)
@@ -75,13 +74,16 @@ def _checkpoint(m: BlockMatrixFrame) -> BlockMatrixFrame:
 
 
 def _level_ck(child_is_leaf: bool):
-    """Depth-aware lineage control (measured, see inverse._lu_inv_rec):
-    at the lowest internal recursion level the children are leaf task
-    outputs with two-step lineage, and localCheckpoint's serialized
-    materialization jobs dominate the wall — plain persist suffices.
-    One level up, checkpoints bound the recursive plan's Catalyst
-    analysis cost (3x plan-build measured without them). Returns the
-    identity at leaf-adjacent levels, ``_checkpoint`` above."""
+    """Depth-aware lineage control, measured on the fused inverse
+    (``inverse._lu_inv_rec``, N=2048/N=4096 A/B): at the lowest
+    internal recursion level the children are leaf task outputs —
+    already persisted, two-step lineage — and localCheckpoint's
+    serialized materialization jobs dominate the wall (7.8 -> 4.0 s
+    median at N=2048 without them), so plain persist suffices. One
+    level up the opposite holds: without checkpoints the recursive
+    plan triples Catalyst analysis time (4.7 -> 12.8 s plan-build at
+    N=4096). Returns the identity at leaf-adjacent levels,
+    ``_checkpoint`` above."""
     return (lambda m: m) if child_is_leaf else _checkpoint
 
 
@@ -100,85 +102,14 @@ def _concurrently(f1: Callable, f2: Callable) -> tuple:
         return fut1.result(), fut2.result()
 
 
-def _lu_leaf_distributed(a: BlockMatrixFrame
-                         ) -> tuple[np.ndarray, BlockMatrixFrame,
-                                    BlockMatrixFrame]:
-    """Factor a leaf-sized matrix INSIDE one executor task.
-
-    Twin of ``inverse._inv_leaf_distributed`` (same measurement, same
-    reference placement — the reference factors leaves in its task
-    JVMs, never on a coordinating node): the driver roundtrip for a
-    leaf LU is a leaf-sized Arrow collect, a core-contended ludcmp,
-    and TWO leaf-sized createDataFrame uploads (L and U). Here the
-    blocks shuffle to one task, ludcmp runs in a scheduled core slot,
-    and only the pivot vector (N ints) crosses to the driver. L and U
-    come back as filters over the one persisted task output, tagged
-    0=L / 1=U / 2=perm; the strict triangles' zero blocks are never
-    materialized. A singular leaf raises inside the task and surfaces
-    as the same LinAlgError message via the Spark job failure."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    bs, n, m = a.block_size, a.n_rows, a.n_cols
-    schema = StructType(
-        [
-            StructField("tag", IntegerType()),
-            StructField("bi", IntegerType()),
-            StructField("bj", IntegerType()),
-            StructField("rows", IntegerType()),
-            StructField("cols", IntegerType()),
-            StructField("data", ArrayType(DoubleType())),
-        ]
-    )
-
-    def fac(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.zeros((n, m))
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(int(r), int(c))
-            mat[int(bi) * bs:int(bi) * bs + int(r),
-                int(bj) * bs:int(bj) * bs + int(c)] = blk
-        lu_packed, perm = kernels.ludcmp(mat)
-        lower, upper = kernels.split_lu(lu_packed)
-        out = []
-        for tag, tri in ((0, lower), (1, upper)):
-            for bi in range((n + bs - 1) // bs):
-                for bj in range((m + bs - 1) // bs):
-                    if tag == 0 and bj > bi:
-                        continue  # strict upper of L is zero
-                    if tag == 1 and bi > bj:
-                        continue  # strict lower of U is zero
-                    blk = tri[bi * bs:(bi + 1) * bs,
-                              bj * bs:(bj + 1) * bs]
-                    out.append(
-                        (tag, bi, bj, blk.shape[0], blk.shape[1],
-                         np.ascontiguousarray(blk).ravel())
-                    )
-        out.append((2, 0, 0, 1, n, perm.astype(np.float64)))
-        return pd.DataFrame(
-            out, columns=["tag", "bi", "bj", "rows", "cols", "data"]
-        )
-
-    tagged = (
-        a.df.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(fac, schema)
-        .persist()
-    )
-    perm_row = tagged.filter(F.col("tag") == 2).collect()[0]
-    perm = np.asarray(perm_row["data"], dtype=np.float64).astype(np.int64)
-    block_cols = ["bi", "bj", "rows", "cols", "data"]
-    lower = BlockMatrixFrame(
-        tagged.filter(F.col("tag") == 0).select(*block_cols), n, m, bs
-    )
-    upper = BlockMatrixFrame(
-        tagged.filter(F.col("tag") == 1).select(*block_cols), n, m, bs
-    )
-    return perm, lower, upper
+def _inv_leaf(t: BlockMatrixFrame, mask: str) -> BlockMatrixFrame:
+    """Invert a leaf-sized triangular factor (O16) with
+    ``ops.leaf_task``: ``mask`` is ``"lower"`` for a unit-lower L,
+    ``"upper"`` for U."""
+    inv = kernels.inv_lower_unit if mask == "lower" else kernels.inv_upper
+    return ops.leaf_task(
+        t, lambda x: (inv(x),), [(t.n_rows, t.n_cols, mask)]
+    )[0]
 
 
 def lu(a: BlockMatrixFrame, leaf_size: int | None = None
@@ -190,23 +121,18 @@ def lu(a: BlockMatrixFrame, leaf_size: int | None = None
         raise ValueError("LU requires a square matrix")
     if leaf_size is None:
         leaf_size = auto_leaf(a.n_rows)
-    spark = a.df.sparkSession
     bs = a.block_size
 
     if a.n_rows <= leaf_size or a.nbi == 1:
         # Leaf factorization, exactly the reference's leaf branch
-        # (`LUDecomposition.java:686-699`). Driver-local only when
-        # the matrix already lives on the driver; otherwise the
-        # factorization runs executor-side (see _lu_leaf_distributed).
-        if a.local is None and ops.leaf_inv_mode() == "executor":
-            return _lu_leaf_distributed(a)
-        lu_packed, perm = kernels.ludcmp(a.to_numpy())
-        lower, upper = kernels.split_lu(lu_packed)
-        return (
-            perm,
-            BlockMatrixFrame.from_numpy(spark, lower, bs),
-            BlockMatrixFrame.from_numpy(spark, upper, bs),
+        # (`LUDecomposition.java:686-699`); of an executor-side leaf
+        # only the pivot row crosses to the driver.
+        n = a.n_rows
+        lower, upper, perm = ops.leaf_task(
+            a, kernels.lu_factors,
+            [(n, n, "lower"), (n, n, "upper"), (1, n, "full")],
         )
+        return perm.to_numpy()[0].astype(np.int64), lower, upper
 
     nb = a.nbi
     mb = nb // 2
@@ -261,12 +187,7 @@ def solve_lower(lo: BlockMatrixFrame, b: BlockMatrixFrame,
                 leaf_size: int = DEFAULT_LEAF) -> BlockMatrixFrame:
     """Solve L·X = B for unit-lower-triangular distributed L."""
     if lo.n_rows <= leaf_size or lo.nbi == 1:
-        if lo.local is None and ops.leaf_inv_mode() == "executor":
-            # distributed leaf factor: invert executor-side, solve as
-            # a join-gemm — no driver transfer (see BENCH_NOTES r5)
-            return multiply(ops.inv_leaf_distributed(lo, "lower"), b)
-        inv_l = kernels.inv_lower_unit(lo.to_numpy())
-        return _apply_left(inv_l, b)
+        return multiply(_inv_leaf(lo, "lower"), b)
     mb = lo.nbi // 2
     la = lo.slice_blocks(0, mb, 0, mb)
     lc = lo.slice_blocks(mb, lo.nbi, 0, mb)
@@ -288,10 +209,7 @@ def solve_upper_right(up: BlockMatrixFrame, b: BlockMatrixFrame,
                       leaf_size: int = DEFAULT_LEAF) -> BlockMatrixFrame:
     """Solve X·U = B for upper-triangular distributed U."""
     if up.n_rows <= leaf_size or up.nbi == 1:
-        if up.local is None and ops.leaf_inv_mode() == "executor":
-            return multiply(b, ops.inv_leaf_distributed(up, "upper"))
-        inv_u = kernels.inv_upper(up.to_numpy())
-        return _apply_right(b, inv_u)
+        return multiply(b, _inv_leaf(up, "upper"))
     mb = up.nbi // 2
     ua = up.slice_blocks(0, mb, 0, mb)
     ub = up.slice_blocks(0, mb, mb, up.nbj)
@@ -305,60 +223,3 @@ def solve_upper_right(up: BlockMatrixFrame, b: BlockMatrixFrame,
     xb = solve_upper_right(ud, gemm(xa, ub, c=bb, alpha=-1.0), leaf_size)
     df = xa.df.unionAll(xb.shift(0, mb))
     return BlockMatrixFrame(df, b.n_rows, b.n_cols, b.block_size)
-
-
-def _apply_left(mat: np.ndarray, b: BlockMatrixFrame) -> BlockMatrixFrame:
-    """X = mat·B where ``mat`` is a driver-local (leaf-sized) matrix.
-
-    The factor ships in the task closure — the Spark analogue of the
-    reference's replication-20 hot factor files
-    (`LUDecomposition.java:148-150`). Each column strip of B is
-    assembled per-task and hit with one dgemm.
-    """
-    bs = b.block_size
-    n_rows, n_cols = b.n_rows, b.n_cols
-
-    def slv(pdf: pd.DataFrame) -> pd.DataFrame:
-        bj = int(pdf["bj"].iloc[0])
-        c = int(pdf["cols"].iloc[0])
-        strip = np.zeros((mat.shape[1], c))
-        for bi, r, d in zip(pdf["bi"], pdf["rows"], pdf["data"]):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            strip[int(bi) * bs:int(bi) * bs + int(r)] = blk
-        x = mat @ strip
-        out = []
-        for bi in range((x.shape[0] + bs - 1) // bs):
-            blk = x[bi * bs:(bi + 1) * bs]
-            out.append((bi, bj, blk.shape[0], blk.shape[1],
-                        blk.ravel()))
-        return pd.DataFrame(
-            out, columns=["bi", "bj", "rows", "cols", "data"]
-        )
-
-    df = b.df.groupBy("bj").applyInPandas(slv, BLOCK_SCHEMA)
-    return BlockMatrixFrame(df, mat.shape[0], n_cols, bs)
-
-
-def _apply_right(b: BlockMatrixFrame, mat: np.ndarray) -> BlockMatrixFrame:
-    """X = B·mat where ``mat`` is driver-local (leaf-sized)."""
-    bs = b.block_size
-
-    def slv(pdf: pd.DataFrame) -> pd.DataFrame:
-        bi = int(pdf["bi"].iloc[0])
-        r = int(pdf["rows"].iloc[0])
-        strip = np.zeros((r, mat.shape[0]))
-        for bj, c, d in zip(pdf["bj"], pdf["cols"], pdf["data"]):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            strip[:, int(bj) * bs:int(bj) * bs + int(c)] = blk
-        x = strip @ mat
-        out = []
-        for bj in range((x.shape[1] + bs - 1) // bs):
-            blk = x[:, bj * bs:(bj + 1) * bs]
-            out.append((bi, bj, blk.shape[0], blk.shape[1],
-                        blk.ravel()))
-        return pd.DataFrame(
-            out, columns=["bi", "bj", "rows", "cols", "data"]
-        )
-
-    df = b.df.groupBy("bi").applyInPandas(slv, BLOCK_SCHEMA)
-    return BlockMatrixFrame(df, b.n_rows, mat.shape[1], bs)

@@ -1,5 +1,5 @@
 """Distributed block-matrix operators: multiply, add/subtract,
-transpose, row permutation, residual norms.
+transpose, row permutation, residual norms, and the leaf task.
 
 Reference analogues (SURVEY.md §2.1): the Schur-complement reducer's
 grid matmul + subtract (O11, `LUDecomposition.java:495-651`), the
@@ -22,18 +22,25 @@ Physical shapes, 100 TB honest:
   routing table joined to the blocks, then per-output-block row
   assembly. Replaces the reference's recursive pivot composition and
   read-time row indirection.
+- ``leaf_task`` — every recursion leaf's dense numpy work (leaf LU,
+  triangular inversion): one executor task for the whole leaf, or
+  the driver when the leaf already lives there.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
 
-from matrixinversion_spark.matrix.core import BLOCK_SCHEMA, BlockMatrixFrame
+from matrixinversion_spark.matrix.core import (
+    BLOCK_SCHEMA, BlockMatrixFrame, _nblocks,
+)
+
+_BLOCK_COLS = ["bi", "bj", "rows", "cols", "data"]
 
 
 def multiply(a: BlockMatrixFrame, b: BlockMatrixFrame) -> BlockMatrixFrame:
@@ -94,31 +101,14 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
     )
     joined = left.join(right, "k")
 
-    def gemm_sum(pdf: pd.DataFrame, bias: pd.DataFrame | None = None
-                 ) -> pd.DataFrame:
-        acc: np.ndarray | None = None
-        if bias is not None and len(bias):
-            r0 = int(bias["rows"].iloc[0])
-            c0 = int(bias["cols"].iloc[0])
-            acc = np.asarray(
-                bias["data"].iloc[0], dtype=np.float64
-            ).reshape(r0, c0).copy()
-        bi = bj = None
+    def products(pdf: pd.DataFrame) -> Iterator[tuple]:
         for bi, bj, ar, ac, bc, ad, bd in zip(
             pdf["bi"], pdf["bj"], pdf["a_rows"], pdf["a_cols"],
             pdf["b_cols"], pdf["a_data"], pdf["b_data"],
         ):
             blk_a = np.asarray(ad, dtype=np.float64).reshape(ar, ac)
             blk_b = np.asarray(bd, dtype=np.float64).reshape(ac, bc)
-            p = alpha * (blk_a @ blk_b)
-            acc = p if acc is None else acc + p
-        if bi is None:  # bias block with no product contributions
-            bi = int(bias["bi"].iloc[0])
-            bj = int(bias["bj"].iloc[0])
-        return pd.DataFrame(
-            [(int(bi), int(bj), acc.shape[0], acc.shape[1], acc.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
+            yield int(bi), int(bj), alpha * (blk_a @ blk_b)
 
     if k_chunk is not None:
         if k_chunk < 1:
@@ -129,55 +119,59 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
                 "kc", (F.col("k") / F.lit(int(k_chunk))).cast("int")
             )
             .groupBy("bi", "bj", "kc")
-            .applyInPandas(lambda pdf: gemm_sum(pdf), BLOCK_SCHEMA)
+            .applyInPandas(lambda pdf: _block_sum(products(pdf)),
+                           BLOCK_SCHEMA)
         )
-
-        def merge_sum(pdf: pd.DataFrame, bias: pd.DataFrame
-                      ) -> pd.DataFrame:
-            acc: np.ndarray | None = None
-            if len(bias):
-                acc = np.asarray(
-                    bias["data"].iloc[0], dtype=np.float64
-                ).reshape(
-                    int(bias["rows"].iloc[0]), int(bias["cols"].iloc[0])
-                ).copy()
-            bi = bj = None
-            for bi, bj, r, cc, d in zip(
-                pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                p = np.asarray(d, dtype=np.float64).reshape(int(r), int(cc))
-                acc = p.copy() if acc is None else acc + p
-            if bi is None:
-                bi = int(bias["bi"].iloc[0])
-                bj = int(bias["bj"].iloc[0])
-            return pd.DataFrame(
-                [(int(bi), int(bj), acc.shape[0], acc.shape[1],
-                  acc.ravel())],
-                columns=["bi", "bj", "rows", "cols", "data"],
-            )
-
+        # stage 2: the partials are already products — sum them
         bias_df = c.df if c is not None else a.df.sparkSession.createDataFrame(
             [], BLOCK_SCHEMA
         )
         out = (
             partials.groupBy("bi", "bj")
             .cogroup(bias_df.groupBy("bi", "bj"))
-            .applyInPandas(merge_sum, BLOCK_SCHEMA)
+            .applyInPandas(
+                lambda pdf, bias: _block_sum(_blocks(pdf), bias),
+                BLOCK_SCHEMA,
+            )
         )
     elif c is None:
         out = joined.groupBy("bi", "bj").applyInPandas(
-            lambda pdf: gemm_sum(pdf), BLOCK_SCHEMA
+            lambda pdf: _block_sum(products(pdf)), BLOCK_SCHEMA
         )
     else:
         out = (
             joined.groupBy("bi", "bj")
             .cogroup(c.df.groupBy("bi", "bj"))
             .applyInPandas(
-                lambda left_pdf, right_pdf: gemm_sum(left_pdf, right_pdf),
+                lambda pdf, bias: _block_sum(products(pdf), bias),
                 BLOCK_SCHEMA,
             )
         )
     return BlockMatrixFrame(out, a.n_rows, b.n_cols, a.block_size)
+
+
+def _blocks(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """(bi, bj, ndarray) per row of a block-schema pandas frame."""
+    for bi, bj, r, c, d in zip(
+        pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
+    ):
+        yield int(bi), int(bj), np.asarray(d, dtype=np.float64).reshape(r, c)
+
+
+def _block_sum(terms: Iterator[tuple],
+               bias: pd.DataFrame | None = None) -> pd.DataFrame:
+    """One output block: the optional bias block plus every
+    (bi, bj, ndarray) term — the accumulator of all gemm paths."""
+    acc: np.ndarray | None = None
+    bi = bj = None
+    if bias is not None and len(bias):
+        bi, bj, acc = next(_blocks(bias))
+    for bi, bj, p in terms:
+        acc = p if acc is None else acc + p
+    return pd.DataFrame(
+        [(bi, bj, acc.shape[0], acc.shape[1], acc.ravel())],
+        columns=_BLOCK_COLS,
+    )
 
 
 def _axpy(a: BlockMatrixFrame, b: BlockMatrixFrame,
@@ -306,52 +300,6 @@ def permute_rows(a: BlockMatrixFrame, perm: np.ndarray) -> BlockMatrixFrame:
     return BlockMatrixFrame(out, a.n_rows, a.n_cols, bs)
 
 
-def permute_cols(a: BlockMatrixFrame, perm: np.ndarray) -> BlockMatrixFrame:
-    """Return M with M[:, j] = A[:, perm[j]] (column gather).
-
-    Same routing strategy as ``permute_rows`` but on block columns —
-    used to apply the pivot on the right (A⁻¹ = U⁻¹·L⁻¹·P) without
-    paying two full transposes.
-    """
-    perm = np.asarray(perm, dtype=np.int64)
-    if perm.shape[0] != a.n_cols:
-        raise ValueError("permutation length != n_cols")
-    bs = a.block_size
-    spark = a.df.sparkSession
-
-    pairs = sorted(
-        {(int(j // bs), int(p // bs)) for j, p in enumerate(perm)}
-    )
-    routing = spark.createDataFrame(pairs, "bj_out int, bj int")
-    joined = a.df.join(F.broadcast(routing), "bj")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        bj_out = int(pdf["bj_out"].iloc[0])
-        bi = int(pdf["bi"].iloc[0])
-        rows = int(pdf["rows"].iloc[0])
-        c0 = bj_out * bs
-        c1 = min(c0 + bs, perm.shape[0])
-        out = np.zeros((rows, c1 - c0))
-        for bj_src, r, c, d in zip(
-            pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            src0 = int(bj_src) * bs
-            for local_j, global_j in enumerate(range(c0, c1)):
-                src = perm[global_j]
-                if src0 <= src < src0 + int(c):
-                    out[:, local_j] = blk[:, src - src0]
-        return pd.DataFrame(
-            [(bi, bj_out, out.shape[0], out.shape[1], out.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
-
-    out = joined.groupBy("bi", "bj_out").applyInPandas(
-        assemble, BLOCK_SCHEMA
-    )
-    return BlockMatrixFrame(out, a.n_rows, a.n_cols, bs)
-
-
 def max_abs_diff_from_identity(a: BlockMatrixFrame) -> float:
     """max|A − I|∞ — the correctness functional ‖A·A⁻¹ − I‖ from
     SURVEY.md §5 (property-based goldens)."""
@@ -395,70 +343,86 @@ def max_abs_diff(a: BlockMatrixFrame, b: BlockMatrixFrame) -> float:
     return float(row.max_err if row.max_err is not None else 0.0)
 
 
-def leaf_inv_mode() -> str:
-    """Where leaf triangular inversions/factorizations run:
-    ``executor`` (default) or ``driver`` (the collect-invert-reupload
-    path, kept for A/B measurement via ``SPARK_GRAFT_LEAF_INV=driver``
-    — see BENCH_NOTES round-5)."""
-    import os
+def leaf_task(a: BlockMatrixFrame,
+              kernel: Callable[[np.ndarray], Sequence[np.ndarray]],
+              outputs: Sequence[tuple[int, int, str]],
+              retained: list | None = None) -> list[BlockMatrixFrame]:
+    """Run a numpy ``kernel`` on the whole leaf-sized matrix ``a`` and
+    return one BlockMatrixFrame per declared output — the one place
+    a recursion leaf's dense work runs (leaf LU O9/O12, triangular
+    inversion O16; the triangular-solve leaves of O10 multiply by an
+    inverted leaf).
 
-    return os.environ.get("SPARK_GRAFT_LEAF_INV", "executor")
+    ``kernel`` maps the assembled ndarray to one array per output.
+    Each output is ``(n_rows, n_cols, mask)``; the mask names the
+    blocks it may hold: ``"full"``, ``"lower"`` (bi ≥ bj) or
+    ``"upper"`` (bi ≤ bj) — the strict triangles' zero blocks are
+    never materialized.
 
-
-def inv_leaf_distributed(tri: BlockMatrixFrame,
-                         kind: str) -> BlockMatrixFrame:
-    """Invert a leaf-sized triangular factor INSIDE one executor task.
-
-    The reference inverts triangular strips in its mappers
-    (`LUInverse.java:88-167`) — executor-side, never on the driver.
-    The driver-roundtrip alternative (collect → np.linalg.inv →
-    createDataFrame) measurably loses on local[32]: the collect moves
-    a leaf (8–128 MB) through Arrow while sibling jobs run, and the
-    driver-thread BLAS then contends with all 32 executor threads for
-    cores, inflating a 0.1 s inversion to ~4 s (measured,
-    scripts/exp_pipeline_16k.py — driver leaf kernels were 63 s of a
-    99 s N=4096 inverse). Shipping the blocks to ONE task instead
-    costs a leaf-sized shuffle but runs the BLAS in a scheduled core
-    slot and skips both driver transfers. On a multi-executor cluster
-    the same plan also removes the driver as a bandwidth bottleneck.
+    Placement: when ``a.local`` is set the data is already on the
+    driver, so the kernel runs there and every output is a
+    ``from_numpy`` frame (all-zero blocks dropped). Otherwise the
+    blocks shuffle to ONE executor task, as the reference factors
+    and inverts its leaves in task JVMs (`LUDecomposition.java:
+    686-699`, `LUInverse.java:88-167`). The driver round-trip
+    (collect → kernel → createDataFrame) measurably loses: the
+    collect moves a leaf through Arrow while sibling jobs run, and
+    driver-thread BLAS contends with every executor thread for cores
+    — driver leaf kernels were 63 s of a 99 s N=4096 inverse
+    (BENCH_NOTES round 5). The task costs one leaf-sized shuffle but
+    runs the BLAS in a scheduled core slot. With several outputs the
+    task tags each block with its output's index and its result is
+    persisted once (and appended to ``retained``); each output is a
+    tag filter over it. A kernel error — a singular leaf — raises in
+    the task and surfaces, message intact, as the Spark job failure.
     """
-    from matrixinversion_spark.matrix import kernels
+    bs = a.block_size
+    if a.local is not None:
+        spark = a.df.sparkSession
+        return [BlockMatrixFrame.from_numpy(spark, x, bs)
+                for x in kernel(a.local)]
+    n, m = a.n_rows, a.n_cols
+    tagged = len(outputs) > 1
 
-    bs = tri.block_size
-    n, m = tri.n_rows, tri.n_cols
-    inv_fn = (kernels.inv_upper if kind == "upper"
-              else kernels.inv_lower_unit)
-
-    def inv(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = np.zeros((n, m))
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(int(r), int(c))
-            a[int(bi) * bs:int(bi) * bs + int(r),
-              int(bj) * bs:int(bj) * bs + int(c)] = blk
-        x = inv_fn(a)
+    def task(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = np.zeros((n, m))
+        for bi, bj, blk in _blocks(pdf):
+            x[bi * bs:bi * bs + blk.shape[0],
+              bj * bs:bj * bs + blk.shape[1]] = blk
         out = []
-        for bi in range((n + bs - 1) // bs):
-            for bj in range((m + bs - 1) // bs):
-                if kind == "upper" and bi > bj:
-                    continue  # strict lower of U⁻¹ is zero
-                if kind == "lower" and bj > bi:
-                    continue  # strict upper of L⁻¹ is zero
-                blk = x[bi * bs:(bi + 1) * bs, bj * bs:(bj + 1) * bs]
-                out.append(
-                    (bi, bj, blk.shape[0], blk.shape[1],
-                     np.ascontiguousarray(blk).ravel())
-                )
-        return pd.DataFrame(
-            out, columns=["bi", "bj", "rows", "cols", "data"]
-        )
+        for tag, (y, (rows, cols, mask)) in enumerate(
+            zip(kernel(x), outputs)
+        ):
+            for bi in range(_nblocks(rows, bs)):
+                for bj in range(_nblocks(cols, bs)):
+                    if (mask == "lower" and bj > bi
+                            or mask == "upper" and bi > bj):
+                        continue
+                    blk = y[bi * bs:(bi + 1) * bs, bj * bs:(bj + 1) * bs]
+                    out.append(
+                        (tag, bi, bj, blk.shape[0], blk.shape[1],
+                         np.ascontiguousarray(blk).ravel())
+                    )
+        pdf = pd.DataFrame(out, columns=["tag", *_BLOCK_COLS])
+        return pdf if tagged else pdf[_BLOCK_COLS]
 
     # a named constant column, not groupBy(lit(1)) — Spark resolves a
     # bare integer literal in groupBy as a GROUP BY ordinal
     df = (
-        tri.df.withColumn("_g", F.lit(1))
+        a.df.withColumn("_g", F.lit(1))
         .groupBy("_g")
-        .applyInPandas(inv, BLOCK_SCHEMA)
+        .applyInPandas(task, f"tag int, {BLOCK_SCHEMA}" if tagged
+                       else BLOCK_SCHEMA)
     )
-    return BlockMatrixFrame(df, n, m, bs)
+    if not tagged:
+        rows, cols, _ = outputs[0]
+        return [BlockMatrixFrame(df, rows, cols, bs)]
+    df = df.persist()
+    if retained is not None:
+        retained.append(df)
+    return [
+        BlockMatrixFrame(
+            df.filter(F.col("tag") == i).select(*_BLOCK_COLS), rows, cols, bs
+        )
+        for i, (rows, cols, _) in enumerate(outputs)
+    ]

@@ -18,6 +18,17 @@ def rng():
     return np.random.default_rng(42)
 
 
+def _placed(spark, m: np.ndarray, bs: int,
+            placement: str) -> BlockMatrixFrame:
+    """``m`` as a frame: ``"driver"`` keeps from_numpy's driver twin,
+    so leaves run on the driver; ``"executor"`` drops it, so leaves
+    run as ops.leaf_task's executor task."""
+    bm = BlockMatrixFrame.from_numpy(spark, m, bs)
+    if placement == "driver":
+        return bm
+    return BlockMatrixFrame(bm.df, bm.n_rows, bm.n_cols, bm.block_size)
+
+
 def test_multiply_matches_numpy(spark, rng):
     a = rng.random((96, 80))
     b = rng.random((80, 112))
@@ -75,9 +86,11 @@ def test_random_uniform_deterministic(spark):
     assert 0.0 < a.to_numpy().mean() < 1.0
 
 
-def test_lu_residual_and_structure(spark, rng):
+# the placement checks keep the "driver" case under their own name;
+# test_executor_placement below reruns them with "executor"
+def test_lu_residual_and_structure(spark, rng, placement="driver"):
     m = rng.random((96, 96))
-    bm = BlockMatrixFrame.from_numpy(spark, m, 16)
+    bm = _placed(spark, m, 16, placement)
     perm, lo, up = lumod.lu(bm, leaf_size=32)
     ln, un = lo.to_numpy(), up.to_numpy()
     assert np.abs(m[perm] - ln @ un).max() < 1e-10 * 96
@@ -94,13 +107,13 @@ def test_lu_at_leaf_boundary(spark, rng):
     assert np.abs(m[perm] - lo.to_numpy() @ up.to_numpy()).max() < 1e-11
 
 
-def test_triangular_solves_distributed(spark, rng):
+def test_triangular_solves_distributed(spark, rng, placement="driver"):
     n = 96
     lower = np.tril(rng.random((n, n)), -1) + np.eye(n)
     upper = np.triu(rng.random((n, n))) + np.eye(n) * 3
     b = rng.random((n, 64))
-    bl = BlockMatrixFrame.from_numpy(spark, lower, 32)
-    bu = BlockMatrixFrame.from_numpy(spark, upper, 32)
+    bl = _placed(spark, lower, 32, placement)
+    bu = _placed(spark, upper, 32, placement)
     bb = BlockMatrixFrame.from_numpy(spark, b, 32)
     x1 = lumod.solve_lower(bl, bb, leaf_size=32).to_numpy()
     assert np.abs(lower @ x1 - b).max() < 1e-10
@@ -109,24 +122,24 @@ def test_triangular_solves_distributed(spark, rng):
     assert np.abs(x2 @ upper - b.T).max() < 1e-10
 
 
-def test_triangular_inverses_distributed(spark, rng):
+def test_triangular_inverses_distributed(spark, rng, placement="driver"):
     n = 96
     lower = np.tril(rng.random((n, n)), -1) + np.eye(n)
     upper = np.triu(rng.random((n, n))) + np.eye(n) * 3
     il = invmod.inverse_lower_unit(
-        BlockMatrixFrame.from_numpy(spark, lower, 32), leaf_size=32
+        _placed(spark, lower, 32, placement), leaf_size=32
     ).to_numpy()
     iu = invmod.inverse_upper(
-        BlockMatrixFrame.from_numpy(spark, upper, 32), leaf_size=32
+        _placed(spark, upper, 32, placement), leaf_size=32
     ).to_numpy()
     assert np.abs(lower @ il - np.eye(n)).max() < 1e-10
     assert np.abs(upper @ iu - np.eye(n)).max() < 1e-10
 
 
 def _inverse_check(spark, m: np.ndarray, bs: int, leaf: int,
-                   tol_scale: float = 1.0):
+                   tol_scale: float = 1.0, placement: str = "driver"):
     n = m.shape[0]
-    bm = BlockMatrixFrame.from_numpy(spark, m, bs)
+    bm = _placed(spark, m, bs, placement)
     minv = invmod.inverse(bm, leaf_size=leaf).to_numpy()
     id_err = np.abs(m @ minv - np.eye(n)).max()
     assert id_err < 1e-8 * n * tol_scale, f"identity err {id_err}"
@@ -134,13 +147,15 @@ def _inverse_check(spark, m: np.ndarray, bs: int, leaf: int,
     assert diff_err < 1e-6 * tol_scale, f"differential err {diff_err}"
 
 
-def test_inverse_uniform_two_levels(spark, rng):
-    _inverse_check(spark, rng.random((128, 128)), bs=16, leaf=32)
+def test_inverse_uniform_two_levels(spark, rng, placement="driver"):
+    _inverse_check(spark, rng.random((128, 128)), bs=16, leaf=32,
+                   placement=placement)
 
 
-def test_inverse_odd_size(spark, rng):
+def test_inverse_odd_size(spark, rng, placement="driver"):
     # odd n: uneven block split at every level (FIXTURES uniform_1001)
-    _inverse_check(spark, rng.random((101, 101)), bs=16, leaf=32)
+    _inverse_check(spark, rng.random((101, 101)), bs=16, leaf=32,
+                   placement=placement)
 
 
 def test_inverse_diag_closed_form(spark):
@@ -157,16 +172,47 @@ def test_inverse_orthogonal_closed_form(spark, rng):
     assert np.abs(minv - q.T).max() < 1e-10
 
 
-def test_inverse_negative_entries(spark, rng):
+def test_inverse_negative_entries(spark, rng, placement="driver"):
     # signed-pivot divergence fixture (FIXTURES negative_256, scaled)
-    _inverse_check(spark, rng.uniform(-1, 1, (96, 96)), bs=32, leaf=32)
+    _inverse_check(spark, rng.uniform(-1, 1, (96, 96)), bs=32, leaf=32,
+                   placement=placement)
 
 
-def test_inverse_pivot_stress(spark, rng):
+def test_inverse_pivot_stress(spark, rng, placement="driver"):
     # rotated rows force nontrivial pivoting at every level
     m = rng.random((96, 96))
     m = np.roll(m, 37, axis=0)
-    _inverse_check(spark, m, bs=32, leaf=32)
+    _inverse_check(spark, m, bs=32, leaf=32, placement=placement)
+
+
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_lu_residual_and_structure,
+        test_triangular_solves_distributed,
+        test_triangular_inverses_distributed,
+        test_inverse_uniform_two_levels,
+        test_inverse_odd_size,
+        test_inverse_negative_entries,
+        test_inverse_pivot_stress,
+    ],
+    ids=lambda f: f.__name__.removeprefix("test_"),
+)
+def test_executor_placement(spark, rng, check):
+    """The same checks on frames held only on executors: every leaf
+    runs as ops.leaf_task's executor task, not just the Schur
+    complement's."""
+    check(spark, rng, placement="executor")
+
+
+def test_singular_leaf_on_executors_raises(spark, rng):
+    # two equal columns make the first 32x32 leaf singular; the
+    # LinAlgError raised inside the task must surface with its message
+    m = rng.random((64, 64))
+    m[:, 1] = m[:, 0]
+    bm = _placed(spark, m, 16, "executor")
+    with pytest.raises(Exception, match="singular leaf"):
+        invmod.inverse(bm, leaf_size=32).to_numpy()
 
 
 @pytest.mark.slow

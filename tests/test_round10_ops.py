@@ -30,10 +30,11 @@ class TestFusedInversePlanPin:
         # toPandas() / toLocalIterator(); none may appear in the
         # fused recursion's source.
         from matrixinversion_spark.matrix import inverse as invmod
+        from matrixinversion_spark.matrix import ops
 
         for fn in (
             invmod._lu_inv_rec,
-            invmod._leaf_inv_frames,
+            ops.leaf_task,
             invmod.inverse,
         ):
             src = inspect.getsource(fn)
