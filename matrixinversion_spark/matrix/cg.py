@@ -14,8 +14,9 @@ same fused one-shuffle SUMMA join as the LU pipeline, `ops.gemm`)
 plus two JVM-side vector dots (zip_with multiply + aggregate —
 per-block partials, one bounded scalar to the driver each) and two
 axpy block joins. The driver holds only alpha/beta scalars; the
-vectors stay distributed and are localCheckpoint'd each iteration
-so lineage stays O(1) instead of O(iterations).
+vectors stay distributed and are checkpointed each iteration
+(``BlockMatrixFrame.checkpoint``: eager for the vectors the next dot
+reads, lazy for x) so lineage stays O(1) instead of O(iterations).
 
 Reference provenance: extends the solve surface of
 `LUDecomposition.java:410-493` (triangular solves) and
@@ -68,7 +69,8 @@ def dot_self_and(a: BlockMatrixFrame,
     failure mode two separate ``dot`` calls never had (ADVICE r13).
     BlockMatrixFrame enforces block-key uniqueness by construction —
     every producer emits one row per coordinate — so this is a
-    documented precondition, not a runtime check."""
+    documented precondition, not a runtime check; it is asserted for
+    every producer by ``tests/test_matrix.py::test_block_keys_unique``."""
     la = a.df.select("bi", "bj", F.col("data").alias("a_data"))
     rc = c.df.select("bi", "bj", F.col("data").alias("c_data"))
     per = la.join(rc, ["bi", "bj"], "left").select(
@@ -93,35 +95,10 @@ def dot_self_and(a: BlockMatrixFrame,
     )
 
 
-def _pin(frame: BlockMatrixFrame, eager: bool = True) -> BlockMatrixFrame:
-    """Materialize and truncate lineage — CG recurrences otherwise
-    grow the plan by two joins per iteration until the driver chokes
-    on analysis, the same failure mode the iterative
-    connected-components loop hit in round 6.
-
-    ``eager=False`` (r13 optimization round) still truncates the
-    lineage but defers materialization to the frame's first consumer
-    — right for the solution vector x, which no in-loop dot ever
-    reads: the eager form paid one blocking checkpoint job per
-    iteration purely to materialize a vector nothing consumes until
-    the loop ends. Callers chaining MANY lazy pins (x across
-    hundreds of iterations) should force an eager pin every few
-    dozen steps — each lazy localCheckpoint keeps its parent's
-    blocks referenced until first materialization, so an unbounded
-    chain retains every iterate and materializes as one deep job
-    cascade at the end (ADVICE r13; see _X_PIN_EVERY below)."""
-    return BlockMatrixFrame(
-        frame.df.localCheckpoint(eager=eager),
-        frame.n_rows,
-        frame.n_cols,
-        frame.block_size,
-    )
-
-
-# Force an eager pin of the (otherwise lazily-pinned) solution vector
-# every K iterations: bounds the lazy-checkpoint chain depth and the
-# retained intermediate blocks at K while keeping ~(K-1)/K of the
-# saved per-iteration checkpoint jobs (ADVICE r13).
+# Force an eager checkpoint of the (otherwise lazily checkpointed)
+# solution vector every K iterations: bounds the lazy-checkpoint chain
+# depth and the retained intermediate blocks at K while keeping
+# ~(K-1)/K of the saved per-iteration checkpoint jobs (ADVICE r13).
 _X_PIN_EVERY = 25
 
 
@@ -153,7 +130,7 @@ def cg_solve(
     x = BlockMatrixFrame.from_numpy(
         spark, np.zeros((n, 1)), block_size=a.block_size, keep_zeros=True
     )
-    r = _pin(b)  # r0 = b - A·0 = b
+    r = b.checkpoint(eager=True)  # r0 = b - A·0 = b
     z = _ewise_mul(r, dinv) if dinv is not None else r
     p = z
     rr = dot(r, r)
@@ -166,24 +143,24 @@ def cg_solve(
         # executes once (r13 optimization round: the unpersisted form
         # re-ran the SUMMA join per consumer, i.e. 2 matvecs per
         # iteration). The dot's collect materializes the cache; the
-        # eager r pin below reads it; unpersist immediately after.
+        # eager r checkpoint below reads it; unpersist immediately after.
         ap = ops.multiply(a, p)
         ap.df.persist()
         alpha = rz / dot(p, ap)
-        x = _pin(ops._axpy(x, p, alpha),
-                 eager=(it % _X_PIN_EVERY == _X_PIN_EVERY - 1))
-        r = _pin(ops._axpy(r, ap, -alpha))
+        x = ops._axpy(x, p, alpha).checkpoint(
+            eager=(it % _X_PIN_EVERY == _X_PIN_EVERY - 1))
+        r = ops._axpy(r, ap, -alpha).checkpoint(eager=True)
         ap.df.unpersist()
         if dinv is not None:
             # fused (||r||², <r, z>) — one collect instead of two per
             # preconditioned iteration (r14, VERDICT r13 #5; see
             # dot_self_and)
-            z = _pin(_ewise_mul(r, dinv))
+            z = _ewise_mul(r, dinv).checkpoint(eager=True)
             rr, rz_new = dot_self_and(r, z)
         else:
             rr = dot(r, r)
             z, rz_new = r, rr
-        p = _pin(ops._axpy(z, p, rz_new / rz))
+        p = ops._axpy(z, p, rz_new / rz).checkpoint(eager=True)
         rz = rz_new
         it += 1
     return x, it, float(np.sqrt(rr))
@@ -240,7 +217,7 @@ def bicgstab_solve(
     Execution shape per iteration: two distributed gemms (A·p, A·s —
     the same fused one-shuffle SUMMA join) + four bounded-scalar
     dots + five axpy block joins; vectors stay distributed and are
-    lineage-pinned per step exactly like ``cg_solve``. Returns
+    checkpointed per step exactly like ``cg_solve``. Returns
     (x, iterations, final ||r||₂); ``tol`` is relative to ||b||₂.
 
     Raises on bi-Lanczos breakdown (ρ or ω numerically zero) — the
@@ -252,7 +229,7 @@ def bicgstab_solve(
     x = BlockMatrixFrame.from_numpy(
         spark, np.zeros((n, 1)), block_size=a.block_size, keep_zeros=True
     )
-    r = _pin(b)  # r0 = b - A·0
+    r = b.checkpoint(eager=True)  # r0 = b - A·0
     rhat = r  # fixed shadow residual
     rr = dot(r, r)
     stop = (tol * tol) * max(rr, 1e-300)
@@ -272,10 +249,10 @@ def bicgstab_solve(
         else:
             beta = (rho_new / rho) * (alpha / omega)
             # p = r + beta·(p − omega·v)
-            p = _pin(
-                ops._axpy(ops._axpy(r, p, beta), v, -beta * omega)
-            )
-        v = _pin(ops.multiply(a, p))
+            p = ops._axpy(
+                ops._axpy(r, p, beta), v, -beta * omega
+            ).checkpoint(eager=True)
+        v = ops.multiply(a, p).checkpoint(eager=True)
         rv = dot(rhat, v)
         if abs(rv) < 1e-300:
             raise RuntimeError(
@@ -284,14 +261,14 @@ def bicgstab_solve(
                 "residual or use a direct solve"
             )
         alpha = rho_new / rv
-        s = _pin(ops._axpy(r, v, -alpha))
+        s = ops._axpy(r, v, -alpha).checkpoint(eager=True)
         ss = dot(s, s)
         if ss <= stop:  # converged at the half-step
-            x = _pin(ops._axpy(x, p, alpha), eager=False)
+            x = ops._axpy(x, p, alpha).checkpoint()
             rr = ss
             it += 1
             break
-        t = _pin(ops.multiply(a, s))
+        t = ops.multiply(a, s).checkpoint(eager=True)
         # fused (||t||², <t, s>) — one collect instead of two per
         # iteration (r13 optimization round, see dot_self_and)
         tt, ts = dot_self_and(t, s)
@@ -304,9 +281,9 @@ def bicgstab_solve(
             raise RuntimeError(
                 f"BiCGSTAB breakdown: omega vanished (iteration {it})"
             )
-        x = _pin(ops._axpy(ops._axpy(x, p, alpha), s, omega),
-                 eager=(it % _X_PIN_EVERY == _X_PIN_EVERY - 1))
-        r = _pin(ops._axpy(s, t, -omega))
+        x = ops._axpy(ops._axpy(x, p, alpha), s, omega).checkpoint(
+            eager=(it % _X_PIN_EVERY == _X_PIN_EVERY - 1))
+        r = ops._axpy(s, t, -omega).checkpoint(eager=True)
         rr = dot(r, r)
         rho = rho_new
         it += 1
@@ -328,8 +305,7 @@ def la_bicgstab_solve(spark: SparkSession, sf_dir: str) -> F.DataFrame:  # type:
     eye = BlockMatrixFrame.from_numpy(
         spark, float(n) * np.eye(n), block_size=bs
     )
-    a = ops.add(m, eye)
-    a = BlockMatrixFrame(a.df.localCheckpoint(eager=True), n, n, bs)
+    a = ops.add(m, eye).checkpoint(eager=True)
     ones = BlockMatrixFrame.from_numpy(
         spark, np.ones((n, 1)), block_size=bs
     )
@@ -360,10 +336,8 @@ def la_cg_solve(spark: SparkSession, sf_dir: str) -> F.DataFrame:  # type: ignor
     eye = BlockMatrixFrame.from_numpy(
         spark, float(n) * np.eye(n), block_size=bs
     )
-    a = ops.add(sym, eye)
-    a = BlockMatrixFrame(
-        a.df.localCheckpoint(eager=True), n, n, bs
-    )  # A is reused every iteration — pin it once
+    # A is reused every iteration — pin it once
+    a = ops.add(sym, eye).checkpoint(eager=True)
     ones = BlockMatrixFrame.from_numpy(
         spark, np.ones((n, 1)), block_size=bs
     )

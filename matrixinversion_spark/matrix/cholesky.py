@@ -14,10 +14,13 @@ Same recursive-block scheme as ``lu.lu``, reusing its machinery:
     S   = A22 − L21·L21ᵀ              (fused gemm, ops.gemm alpha=-1)
     L22·L22ᵀ = S                      (recursion)
 
-One shuffle per level (the Schur gemm); the triangular solve
-broadcasts the leaf factor exactly like the LU path. Factors are
-localCheckpoint-ed per level for the same lineage-control reason as
-``lu.lu``.
+One shuffle per level (the Schur gemm); the triangular solve inverts
+its leaf in an executor task (``ops.leaf_task``) and applies it as a
+join-gemm, exactly like the LU path. The Cholesky leaf itself is a
+driver collect, so a non-SPD input raises ``np.linalg.LinAlgError``
+eagerly, at factorization time. Factors are checkpointed
+(``BlockMatrixFrame.checkpoint``) per level for the same
+lineage-control reason as ``lu.lu``.
 """
 
 from __future__ import annotations
@@ -28,11 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from matrixinversion_spark.matrix import ops
 from matrixinversion_spark.matrix.core import BlockMatrixFrame
-from matrixinversion_spark.matrix.lu import (
-    DEFAULT_LEAF,
-    _checkpoint,
-    solve_upper_right,
-)
+from matrixinversion_spark.matrix.lu import DEFAULT_LEAF, solve_upper_right
 
 
 def cholesky_leaf(a: np.ndarray) -> np.ndarray:
@@ -66,11 +65,11 @@ def cholesky(a: BlockMatrixFrame,
     a21 = a.slice_blocks(mb, nb, 0, mb)
     a22 = a.slice_blocks(mb, nb, mb, nb)
 
-    l11 = _checkpoint(cholesky(a11, leaf_size)).persist()
-    l21 = _checkpoint(
-        solve_upper_right(ops.transpose(l11), a21, leaf_size)
-    ).persist()
-    s = _checkpoint(ops.gemm(l21, ops.transpose(l21), c=a22, alpha=-1.0))
+    l11 = cholesky(a11, leaf_size).checkpoint().persist()
+    l21 = solve_upper_right(
+        ops.transpose(l11), a21, leaf_size
+    ).checkpoint().persist()
+    s = ops.gemm(l21, ops.transpose(l21), c=a22, alpha=-1.0).checkpoint()
     l22 = cholesky(s, leaf_size)
 
     l_df = (

@@ -62,25 +62,16 @@ def auto_block_size(n: int, max_grid: int = 8) -> int:
 
 @dataclass(frozen=True)
 class BlockMatrixFrame:
-    """A dense distributed matrix as a DataFrame of blocks.
-
-    ``local`` is an optional driver-side ndarray twin, set when the
-    frame was built FROM driver data (``from_numpy`` — recursion
-    leaves). It lets leaf consumers (triangular solves, checkpoints)
-    skip a pointless driver→cluster→driver round-trip: ``to_numpy``
-    returns it directly, and ``_checkpoint`` skips materializing a
-    frame whose lineage is a single createDataFrame. Never mutate it.
-    Transformed frames (slices excepted) drop the twin — it only ever
-    mirrors an exact from_numpy construction.
+    """A dense distributed matrix as a DataFrame of blocks: the
+    DataFrame, its shape and block size, and the caches it retains.
+    The data lives only in the DataFrame, so every consumer (leaf
+    tasks included) runs the same plan however the frame was built.
     """
 
     df: DataFrame
     n_rows: int
     n_cols: int
     block_size: int
-    local: np.ndarray | None = field(
-        default=None, compare=False, repr=False
-    )
     # Intermediate DataFrames persisted while BUILDING this frame
     # (recursion levels, leaf task outputs). The producer appends
     # them; ``release()`` unpersists them once the result has been
@@ -167,10 +158,7 @@ class BlockMatrixFrame:
                     spark.conf.set(_ARROW_CONF, prior)
             except Exception:
                 pass
-        return BlockMatrixFrame(
-            df, n, m, block_size,
-            local=np.array(a, dtype=np.float64, copy=True),
-        )
+        return BlockMatrixFrame(df, n, m, block_size)
 
     @staticmethod
     def random_uniform(spark: SparkSession, n: int, m: int | None = None,
@@ -236,10 +224,7 @@ class BlockMatrixFrame:
     def to_numpy(self) -> np.ndarray:
         """Collect to a driver ndarray (leaves/tests only — bounded by
         leaf_size in the recursion, same shape as the reference's
-        driver-local leaf solve). Driver-backed frames return their
-        ``local`` twin without touching the cluster."""
-        if self.local is not None:
-            return self.local
+        driver-local leaf solve)."""
         out = np.zeros((self.n_rows, self.n_cols))
         bs = self.block_size
         pdf = self.df.toPandas()  # Arrow path: cells arrive as ndarrays
@@ -276,6 +261,30 @@ class BlockMatrixFrame:
         self.retained.clear()
         return self
 
+    def checkpoint(self, eager: bool = False) -> "BlockMatrixFrame":
+        """The same matrix with its lineage truncated
+        (``localCheckpoint``); ``retained`` rides along. Recursive and
+        iterative plans otherwise grow without bound — per recursion
+        level in LU (the reference materializes each level on HDFS
+        instead), by two joins per CG iteration until the driver
+        chokes on analysis (the failure the iterative
+        connected-components loop hit in round 6).
+
+        ``eager=True`` materializes now, in its own job — right for a
+        vector the next step reads at once (CG's residual, read by the
+        following dot). The lazy default defers materialization to the
+        frame's first consumer, saving that job for a frame nothing
+        reads until later (CG's solution vector x, r13). A chain of
+        MANY lazy pins needs an eager one every few dozen steps: each
+        lazy checkpoint keeps its parent's blocks referenced until
+        first materialization, so an unbounded chain retains every
+        iterate and materializes as one deep job cascade at the end
+        (ADVICE r13; ``cg._X_PIN_EVERY``)."""
+        return BlockMatrixFrame(
+            self.df.localCheckpoint(eager=eager), self.n_rows,
+            self.n_cols, self.block_size, retained=self.retained,
+        )
+
     # -- block-coordinate slicing (metadata-only, Catalyst prunes) ----
 
     def slice_blocks(self, bi0: int, bi1: int, bj0: int, bj1: int
@@ -298,13 +307,7 @@ class BlockMatrixFrame:
         )
         n_rows = min(self.n_rows, bi1 * bs) - bi0 * bs
         n_cols = min(self.n_cols, bj1 * bs) - bj0 * bs
-        local = None
-        if self.local is not None:
-            local = np.ascontiguousarray(
-                self.local[bi0 * bs:bi0 * bs + n_rows,
-                           bj0 * bs:bj0 * bs + n_cols]
-            )
-        return BlockMatrixFrame(df, n_rows, n_cols, bs, local=local)
+        return BlockMatrixFrame(df, n_rows, n_cols, bs)
 
     def shift(self, dbi: int, dbj: int) -> DataFrame:
         """Block-index translation (for assembling larger matrices)."""

@@ -27,7 +27,6 @@ from matrixinversion_spark.matrix import kernels
 from matrixinversion_spark.matrix.core import BlockMatrixFrame
 from matrixinversion_spark.matrix.lu import (
     DEFAULT_LEAF,
-    _checkpoint,
     _concurrently,
     _inv_leaf,
     _level_ck,
@@ -259,7 +258,7 @@ def pinv(a: BlockMatrixFrame,
         )
     from matrixinversion_spark.matrix.ops import transpose
 
-    at = _checkpoint(transpose(a)).persist()
+    at = transpose(a).checkpoint().persist()
     gram = multiply(at, a)
     res = solve(gram, at, leaf_size)
     res.retained.append(at.df)

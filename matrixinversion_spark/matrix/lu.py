@@ -16,14 +16,15 @@ Python over *logical* BlockMatrixFrame slices (block-coordinate
 filters — no partition directory trees, no control files); each level
 lowers to a handful of Spark jobs (one join-shuffle matmul + JVM
 subtract). Triangular solves are recursive too — halving splits down
-to a leaf whose factor is inverted by ``ops.leaf_task`` (in one
-executor task, or on the driver when the factor already lives there)
-and applied as one join-gemm (the reference's mappers likewise apply
-the ≤limit-sized diagonal factor, `LUDecomposition.java:470-487`).
+to a leaf whose factor is inverted by ``ops.leaf_task`` in one
+executor task and applied as one join-gemm (the reference's mappers
+likewise apply the ≤limit-sized diagonal factor,
+`LUDecomposition.java:470-487`).
 Leaf factorizations run through ``ops.leaf_task`` the same way.
 
 Lineage control: every level's Schur complement and factors are
-``localCheckpoint``-ed — the recursive plan would otherwise grow
+checkpointed (``BlockMatrixFrame.checkpoint``) above the leaf-adjacent
+level (``_level_ck``) — the recursive plan would otherwise grow
 exponentially (the reference pays the same cost as per-level HDFS
 materialization; a checkpoint is the lineage-native equivalent).
 
@@ -62,17 +63,6 @@ def auto_leaf(n: int) -> int:
     return int(min(MAX_AUTO_LEAF, max(DEFAULT_LEAF, n // 4)))
 
 
-def _checkpoint(m: BlockMatrixFrame) -> BlockMatrixFrame:
-    if m.local is not None:
-        # Driver-backed leaf: lineage is one createDataFrame — a
-        # checkpoint would only add a materialization job.
-        return m
-    return BlockMatrixFrame(
-        m.df.localCheckpoint(eager=False), m.n_rows, m.n_cols, m.block_size,
-        retained=m.retained,  # cache ownership follows the frame
-    )
-
-
 def _level_ck(child_is_leaf: bool):
     """Depth-aware lineage control, measured on the fused inverse
     (``inverse._lu_inv_rec``, N=2048/N=4096 A/B): at the lowest
@@ -82,9 +72,9 @@ def _level_ck(child_is_leaf: bool):
     median at N=2048 without them), so plain persist suffices. One
     level up the opposite holds: without checkpoints the recursive
     plan triples Catalyst analysis time (4.7 -> 12.8 s plan-build at
-    N=4096). Returns the identity at leaf-adjacent levels,
-    ``_checkpoint`` above."""
-    return (lambda m: m) if child_is_leaf else _checkpoint
+    N=4096). Returns the identity at leaf-adjacent levels, a lazy
+    ``BlockMatrixFrame.checkpoint`` above."""
+    return (lambda m: m) if child_is_leaf else BlockMatrixFrame.checkpoint
 
 
 def _concurrently(f1: Callable, f2: Callable) -> tuple:
@@ -125,7 +115,7 @@ def lu(a: BlockMatrixFrame, leaf_size: int | None = None
 
     if a.n_rows <= leaf_size or a.nbi == 1:
         # Leaf factorization, exactly the reference's leaf branch
-        # (`LUDecomposition.java:686-699`); of an executor-side leaf
+        # (`LUDecomposition.java:686-699`), in one executor task;
         # only the pivot row crosses to the driver.
         n = a.n_rows
         lower, upper, perm = ops.leaf_task(

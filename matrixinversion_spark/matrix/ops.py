@@ -23,8 +23,7 @@ Physical shapes, 100 TB honest:
   assembly. Replaces the reference's recursive pivot composition and
   read-time row indirection.
 - ``leaf_task`` — every recursion leaf's dense numpy work (leaf LU,
-  triangular inversion): one executor task for the whole leaf, or
-  the driver when the leaf already lives there.
+  triangular inversion): one executor task for the whole leaf.
 """
 
 from __future__ import annotations
@@ -359,12 +358,10 @@ def leaf_task(a: BlockMatrixFrame,
     ``"upper"`` (bi ≤ bj) — the strict triangles' zero blocks are
     never materialized.
 
-    Placement: when ``a.local`` is set the data is already on the
-    driver, so the kernel runs there and every output is a
-    ``from_numpy`` frame (all-zero blocks dropped). Otherwise the
-    blocks shuffle to ONE executor task, as the reference factors
-    and inverts its leaves in task JVMs (`LUDecomposition.java:
-    686-699`, `LUInverse.java:88-167`). The driver round-trip
+    Placement: the blocks shuffle to ONE executor task, as the
+    reference factors and inverts its leaves in task JVMs
+    (`LUDecomposition.java:686-699`, `LUInverse.java:88-167`),
+    however ``a`` was built. The driver round-trip
     (collect → kernel → createDataFrame) measurably loses: the
     collect moves a leaf through Arrow while sibling jobs run, and
     driver-thread BLAS contends with every executor thread for cores
@@ -377,10 +374,6 @@ def leaf_task(a: BlockMatrixFrame,
     the task and surfaces, message intact, as the Spark job failure.
     """
     bs = a.block_size
-    if a.local is not None:
-        spark = a.df.sparkSession
-        return [BlockMatrixFrame.from_numpy(spark, x, bs)
-                for x in kernel(a.local)]
     n, m = a.n_rows, a.n_cols
     tagged = len(outputs) > 1
 

@@ -547,6 +547,51 @@ def la_tsqr_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _power_iterate(m: BlockMatrixFrame, v: BlockMatrixFrame, iters: int,
+                   chunk: int) -> tuple[float, BlockMatrixFrame]:
+    """Dominant eigenvalue λ of ``m`` by ``iters`` steps of power
+    iteration from the unit vector ``v``; returns (λ, w) with w = m·v
+    for the final iterate v (checkpointed and persisted).
+
+    The first ``iters − 1`` steps run in CHUNKS of up to ``chunk``
+    lazy multiplies between normalizations: the burn-in needs only the
+    DIRECTION, so the driver pays one blocking norm collect per chunk
+    instead of per step. A chunk must stay in float range — components
+    grow ≤ λ^chunk of a unit vector. After it, one classic step on the
+    renormalized vector yields λ with the iterate error of ``iters``
+    straight steps (direction error ~ratio^(iters−1) for dominant
+    ratio ``ratio``). The chunk-boundary checkpoint cuts the logical
+    plan — without it the nested join/applyInPandas lineage grows
+    exponentially in the optimizer and OOMs the driver around depth
+    ~12. Only scalar norms cross to the driver; the vector never
+    leaves the cluster."""
+
+    def norm_of(w: BlockMatrixFrame) -> float:
+        # ‖w‖₂ via a JVM-side aggregate — one tiny scalar action
+        norm2 = w.df.select(
+            F.sum(
+                F.aggregate(
+                    "data", F.lit(0.0), lambda acc, x: acc + x * x
+                )
+            ).alias("s")
+        ).collect()[0]["s"]
+        return float(np.sqrt(norm2))
+
+    done = 0
+    while done < iters - 1:
+        take = min(chunk, iters - 1 - done)
+        w = v
+        for _ in range(take):
+            w = ops.multiply(m, w)
+        w = w.checkpoint()
+        w.persist()
+        v = ops.scale(w, 1.0 / norm_of(w))
+        done += take
+    w = ops.multiply(m, v).checkpoint()
+    w.persist()
+    return norm_of(w), w
+
+
 @query(
     "la_power_iteration",
     oracle="SELECT 256 AS n, 15 AS iters, 0.0 AS rel_residual_r6, TRUE AS ok",
@@ -562,32 +607,14 @@ def la_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel_residual = ‖A·v − λ·v‖∞ / |λ| rounds to 0.0 at 6 decimals,
     which the driver hash-checks as a literal.
 
-    r14 optimization round: the 15 steps run in CHUNKS of up to 7
-    lazy multiplies between normalizations — the la_condition_number
-    ``dominant`` pattern (guide §5, fewer blocking collects): the
-    per-step norm was only ever CONSUMED at the final step, so the
-    burn-in needs just the direction, renormalized often enough to
-    stay in float range (components grow ≤ λ^7 = 256^7 ≈ 7e16 per
-    chunk — 290 orders under the float64 ceiling), and one classic
-    step on the renormalized vector yields λ with the iterate error
-    of 15 straight steps (dominant ratio ≥ 2 ⇒ direction error
-    ~0.5^14). 15 blocking collects → 3."""
-    from matrixinversion_spark.matrix.lu import _checkpoint
-
+    r14 optimization round: the 15 steps run through
+    ``_power_iterate`` in CHUNKS of up to 7 lazy multiplies between
+    normalizations (guide §5, fewer blocking collects — the per-step
+    norm was only ever CONSUMED at the final step): components grow
+    ≤ λ^7 = 256^7 ≈ 7e16 per chunk, 290 orders under the float64
+    ceiling, and the dominant ratio ≥ 2 gives direction error
+    ~0.5^14. 15 blocking collects → 3."""
     n, bs, iters = 256, 64, 15
-
-    def norm_of(w: BlockMatrixFrame) -> float:
-        # ‖w‖₂ via a JVM-side aggregate — one tiny scalar action,
-        # no vector collect
-        norm2 = w.df.select(
-            F.sum(
-                F.aggregate(
-                    "data", F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ).alias("s")
-        ).collect()[0]["s"]
-        return float(np.sqrt(norm2))
-
     with _pinned_exec(spark, (n // bs) ** 2):
         b = BlockMatrixFrame.random_uniform(
             spark, n, block_size=bs, seed=11
@@ -597,24 +624,7 @@ def la_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = BlockMatrixFrame.from_numpy(
             spark, np.full((n, 1), 1.0 / np.sqrt(n)), block_size=bs
         )
-        done = 0
-        while done < iters - 1:
-            take = min(7, iters - 1 - done)
-            w = v
-            for _ in range(take):
-                # chunk-boundary checkpoint (below) cuts the logical
-                # plan — without it the nested join/applyInPandas
-                # lineage grows exponentially in the optimizer and
-                # OOMs the driver around depth ~12; within a chunk
-                # the plan stays ≤7 multiplies deep
-                w = ops.multiply(a, w)
-            w = _checkpoint(w)
-            w.persist()
-            v = ops.scale(w, 1.0 / norm_of(w))
-            done += take
-        w = _checkpoint(ops.multiply(a, v))
-        w.persist()
-        lam = norm_of(w)
+        lam, w = _power_iterate(a, v, iters, chunk=7)
         v = ops.scale(w, 1.0 / lam)
         av = ops.multiply(a, v)
         rel_res = ops.max_abs_diff(av, ops.scale(v, lam)) / lam
@@ -746,8 +756,6 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver) — identical loop skeleton to la_power_iteration, so
     the cost at any n is 2·iters vector gemms plus one full inverse.
     """
-    from matrixinversion_spark.matrix.lu import _checkpoint
-
     n, bs, iters = 256, 64, 14
     rng = np.random.default_rng(77)
     q_np, _ = np.linalg.qr(rng.standard_normal((n, n)))
@@ -758,10 +766,9 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE's post-shuffle coalescing (see la_tsqr_residual's note).
     a = BlockMatrixFrame.from_numpy(spark, a_np, block_size=bs)
     a.persist()
-    a_inv = invmod.inverse(a, leaf_size=2 * bs)
-    a_inv = _checkpoint(a_inv)
+    a_inv = invmod.inverse(a, leaf_size=2 * bs).checkpoint()
     a_inv.persist()
-    # localCheckpoint(eager=False) is LAZY: force one action so A⁻¹
+    # the checkpoint is LAZY: force one action so A⁻¹
     # materializes THROUGH the build caches before they are released
     # (releasing first would make the checkpoint's first real action
     # recompute the recursion uncached; the query's wall is dominated
@@ -770,51 +777,22 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_inv.df.count()
     a_inv.release()
 
-    def norm_of(w: BlockMatrixFrame) -> float:
-        norm2 = w.df.select(
-            F.sum(
-                F.aggregate(
-                    "data", F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ).alias("s")
-        ).collect()[0]["s"]
-        return float(np.sqrt(norm2))
-
-    # Power iteration with CHAINED steps: `chunk` multiplies stay
-    # lazy between materializations, so the driver pays one
-    # job/collect per chunk instead of per step (2·iters -> ~2·iters/5
-    # round trips). Measured honestly at demo n: chaining alone left
-    # the wall unchanged — each multiply is still its own shuffle
-    # STAGE and stage latency, not the driver round-trip, dominates
-    # at n=256; it is kept because fewer blocking collects is the
-    # right shape at any n and costs nothing. The real wall lever is
-    # the iteration COUNT (stage count), trimmed 30→18→14 with
-    # measured 1.43e-08 rel_err (see docstring). Overflow-safe:
-    # within a chunk components grow <= lam^chunk <= 1000^9 = 1e27
-    # of a unit vector — 281 orders under the float64 ceiling. The
-    # burn-in only needs the DIRECTION — after it, one
-    # classic step on the renormalized vector yields the eigenvalue
-    # with the iterate error of the full `iters` straight steps
-    # (dominant-ratio >= 2 => direction error ~0.5^(iters-1)).
-    def dominant(m: BlockMatrixFrame, chunk: int = 9) -> float:
+    # Chunks of 9 (``_power_iterate``): measured honestly at demo n,
+    # chaining alone left the wall unchanged — each multiply is still
+    # its own shuffle STAGE and stage latency, not the driver
+    # round-trip, dominates at n=256; it is kept because fewer
+    # blocking collects is the right shape at any n and costs nothing.
+    # The real wall lever is the iteration COUNT (stage count),
+    # trimmed 30→18→14 with measured 1.43e-08 rel_err (see docstring).
+    # Overflow-safe: components grow <= 1000^9 = 1e27 per chunk — 281
+    # orders under the float64 ceiling.
+    def dominant(m: BlockMatrixFrame) -> float:
         v = BlockMatrixFrame.from_numpy(
             spark,
             rng.standard_normal((n, 1)) / np.sqrt(n),
             block_size=bs,
         )
-        done = 0
-        while done < iters - 1:
-            take = min(chunk, iters - 1 - done)
-            w = v
-            for _ in range(take):
-                w = ops.multiply(m, w)
-            w = _checkpoint(w)
-            w.persist()
-            v = ops.scale(w, 1.0 / norm_of(w))
-            done += take
-        w = _checkpoint(ops.multiply(m, v))
-        w.persist()
-        return norm_of(w)
+        return _power_iterate(m, v, iters, chunk=9)[0]
 
     kappa = dominant(a) * dominant(a_inv)
     rel_err = abs(kappa - 1000.0) / 1000.0

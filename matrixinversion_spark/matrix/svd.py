@@ -33,7 +33,6 @@ import numpy as np
 from matrixinversion_spark.matrix import ops
 from matrixinversion_spark.matrix import qr as qrmod
 from matrixinversion_spark.matrix.core import BlockMatrixFrame
-from matrixinversion_spark.matrix.lu import _checkpoint
 
 
 def randomized_svd(
@@ -69,14 +68,14 @@ def randomized_svd(
         spark, rng.standard_normal((a.n_cols, k)),
         block_size=a.block_size,
     )
-    y = _checkpoint(ops.multiply(a, omega))
+    y = ops.multiply(a, omega).checkpoint()
     q, _ = qrmod.tsqr(y)
     for _ in range(power_iters):
-        z = _checkpoint(ops.multiply(ops.transpose(a), q))
+        z = ops.multiply(ops.transpose(a), q).checkpoint()
         qz, _ = qrmod.tsqr(z)
-        y = _checkpoint(ops.multiply(a, qz))
+        y = ops.multiply(a, qz).checkpoint()
         q, _ = qrmod.tsqr(y)
-    q = _checkpoint(q)
+    q = q.checkpoint()
     q.persist()
     b = ops.multiply(ops.transpose(q), a).to_numpy()  # k×m, driver
     ub, s, vt = np.linalg.svd(b, full_matrices=False)

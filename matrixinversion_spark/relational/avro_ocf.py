@@ -897,8 +897,8 @@ def q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _avro_value_adapter(sch):
     """Converter from pyarrow ``to_pylist`` values (dicts for
-    structs, aware datetimes for timestamps) to the tuple form the
-    compiled encoder walks."""
+    structs, lists of (key, value) pairs for maps, aware datetimes
+    for timestamps) to the tuple form the compiled encoder walks."""
     if isinstance(sch, list):
         inner = _avro_value_adapter(sch[0] if sch[1] == "null" else sch[1])
         return lambda v: None if v is None else inner(v)
@@ -915,7 +915,7 @@ def _avro_value_adapter(sch):
             return lambda v: [item(x) for x in v]
         if t == "map":
             val = _avro_value_adapter(sch["values"])
-            return lambda v: {k: val(x) for k, x in v.items()}
+            return lambda v: {k: val(x) for k, x in dict(v).items()}
     return lambda v: v
 
 

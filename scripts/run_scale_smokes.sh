@@ -18,7 +18,7 @@ for s in exp_skyline_scale exp_minhash_scale exp_ann_scale \
          exp_skew_scale exp_cc_scale exp_asof_merge_scale \
          exp_sessionize_scale exp_ppjoin_scale exp_spatial_scale \
          exp_rownum_scale exp_bloom_scale exp_ks_scale \
-         exp_cg_scale exp_neardup_scale exp_bootstrap_scale \
+         exp_neardup_scale exp_bootstrap_scale \
          exp_lpa_scale exp_lsh_megabucket exp_cdc_spans_scale \
          exp_semdedup_pq_scale exp_line_dedup_scale \
          exp_domain_quota_scale exp_heavy_hitters_scale \

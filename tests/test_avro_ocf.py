@@ -138,6 +138,29 @@ def test_spark_roundtrip_nullable_timestamp(spark, tmp_path):
     assert back[1]["ts"] is None and back[1]["s"] is None
 
 
+def test_spark_roundtrip_nested_types(spark, tmp_path):
+    # the writer adapts Arrow rows, where a map column arrives as a
+    # list of (key, value) pairs, not a dict
+    rows = [
+        (1, {"k": 1.0, "j": None}, (1, "one"), [1, None, 3]),
+        (2, None, None, None),
+        (3, {}, (None, None), []),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id bigint, m map<string,double>, st struct<x:int,y:string>, "
+        "arr array<int>",
+    )
+    out = str(tmp_path / "nested_avro")
+    write_avro(df, out)
+    back = read_avro(spark, out).orderBy("id").collect()
+    assert [
+        (r["id"], r["m"], None if r["st"] is None else tuple(r["st"]),
+         r["arr"])
+        for r in back
+    ] == rows
+
+
 def test_registered_query_matches_parquet(spark):
     from matrixinversion_spark.registry import QUERIES
     from matrixinversion_spark.session import read_table

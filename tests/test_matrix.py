@@ -7,26 +7,19 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from matrixinversion_spark.matrix import cg as cgmod
+from matrixinversion_spark.matrix import cholesky as cholmod
 from matrixinversion_spark.matrix import inverse as invmod
+from matrixinversion_spark.matrix import kernels
 from matrixinversion_spark.matrix import lu as lumod
 from matrixinversion_spark.matrix import ops
+from matrixinversion_spark.matrix import qr as qrmod
 from matrixinversion_spark.matrix.core import BlockMatrixFrame
 
 
 @pytest.fixture(scope="module")
 def rng():
     return np.random.default_rng(42)
-
-
-def _placed(spark, m: np.ndarray, bs: int,
-            placement: str) -> BlockMatrixFrame:
-    """``m`` as a frame: ``"driver"`` keeps from_numpy's driver twin,
-    so leaves run on the driver; ``"executor"`` drops it, so leaves
-    run as ops.leaf_task's executor task."""
-    bm = BlockMatrixFrame.from_numpy(spark, m, bs)
-    if placement == "driver":
-        return bm
-    return BlockMatrixFrame(bm.df, bm.n_rows, bm.n_cols, bm.block_size)
 
 
 def test_multiply_matches_numpy(spark, rng):
@@ -86,11 +79,9 @@ def test_random_uniform_deterministic(spark):
     assert 0.0 < a.to_numpy().mean() < 1.0
 
 
-# the placement checks keep the "driver" case under their own name;
-# test_executor_placement below reruns them with "executor"
-def test_lu_residual_and_structure(spark, rng, placement="driver"):
+def test_lu_residual_and_structure(spark, rng):
     m = rng.random((96, 96))
-    bm = _placed(spark, m, 16, placement)
+    bm = BlockMatrixFrame.from_numpy(spark, m, 16)
     perm, lo, up = lumod.lu(bm, leaf_size=32)
     ln, un = lo.to_numpy(), up.to_numpy()
     assert np.abs(m[perm] - ln @ un).max() < 1e-10 * 96
@@ -107,13 +98,13 @@ def test_lu_at_leaf_boundary(spark, rng):
     assert np.abs(m[perm] - lo.to_numpy() @ up.to_numpy()).max() < 1e-11
 
 
-def test_triangular_solves_distributed(spark, rng, placement="driver"):
+def test_triangular_solves_distributed(spark, rng):
     n = 96
     lower = np.tril(rng.random((n, n)), -1) + np.eye(n)
     upper = np.triu(rng.random((n, n))) + np.eye(n) * 3
     b = rng.random((n, 64))
-    bl = _placed(spark, lower, 32, placement)
-    bu = _placed(spark, upper, 32, placement)
+    bl = BlockMatrixFrame.from_numpy(spark, lower, 32)
+    bu = BlockMatrixFrame.from_numpy(spark, upper, 32)
     bb = BlockMatrixFrame.from_numpy(spark, b, 32)
     x1 = lumod.solve_lower(bl, bb, leaf_size=32).to_numpy()
     assert np.abs(lower @ x1 - b).max() < 1e-10
@@ -122,24 +113,24 @@ def test_triangular_solves_distributed(spark, rng, placement="driver"):
     assert np.abs(x2 @ upper - b.T).max() < 1e-10
 
 
-def test_triangular_inverses_distributed(spark, rng, placement="driver"):
+def test_triangular_inverses_distributed(spark, rng):
     n = 96
     lower = np.tril(rng.random((n, n)), -1) + np.eye(n)
     upper = np.triu(rng.random((n, n))) + np.eye(n) * 3
     il = invmod.inverse_lower_unit(
-        _placed(spark, lower, 32, placement), leaf_size=32
+        BlockMatrixFrame.from_numpy(spark, lower, 32), leaf_size=32
     ).to_numpy()
     iu = invmod.inverse_upper(
-        _placed(spark, upper, 32, placement), leaf_size=32
+        BlockMatrixFrame.from_numpy(spark, upper, 32), leaf_size=32
     ).to_numpy()
     assert np.abs(lower @ il - np.eye(n)).max() < 1e-10
     assert np.abs(upper @ iu - np.eye(n)).max() < 1e-10
 
 
 def _inverse_check(spark, m: np.ndarray, bs: int, leaf: int,
-                   tol_scale: float = 1.0, placement: str = "driver"):
+                   tol_scale: float = 1.0):
     n = m.shape[0]
-    bm = _placed(spark, m, bs, placement)
+    bm = BlockMatrixFrame.from_numpy(spark, m, bs)
     minv = invmod.inverse(bm, leaf_size=leaf).to_numpy()
     id_err = np.abs(m @ minv - np.eye(n)).max()
     assert id_err < 1e-8 * n * tol_scale, f"identity err {id_err}"
@@ -147,15 +138,13 @@ def _inverse_check(spark, m: np.ndarray, bs: int, leaf: int,
     assert diff_err < 1e-6 * tol_scale, f"differential err {diff_err}"
 
 
-def test_inverse_uniform_two_levels(spark, rng, placement="driver"):
-    _inverse_check(spark, rng.random((128, 128)), bs=16, leaf=32,
-                   placement=placement)
+def test_inverse_uniform_two_levels(spark, rng):
+    _inverse_check(spark, rng.random((128, 128)), bs=16, leaf=32)
 
 
-def test_inverse_odd_size(spark, rng, placement="driver"):
+def test_inverse_odd_size(spark, rng):
     # odd n: uneven block split at every level (FIXTURES uniform_1001)
-    _inverse_check(spark, rng.random((101, 101)), bs=16, leaf=32,
-                   placement=placement)
+    _inverse_check(spark, rng.random((101, 101)), bs=16, leaf=32)
 
 
 def test_inverse_diag_closed_form(spark):
@@ -172,17 +161,16 @@ def test_inverse_orthogonal_closed_form(spark, rng):
     assert np.abs(minv - q.T).max() < 1e-10
 
 
-def test_inverse_negative_entries(spark, rng, placement="driver"):
+def test_inverse_negative_entries(spark, rng):
     # signed-pivot divergence fixture (FIXTURES negative_256, scaled)
-    _inverse_check(spark, rng.uniform(-1, 1, (96, 96)), bs=32, leaf=32,
-                   placement=placement)
+    _inverse_check(spark, rng.uniform(-1, 1, (96, 96)), bs=32, leaf=32)
 
 
-def test_inverse_pivot_stress(spark, rng, placement="driver"):
+def test_inverse_pivot_stress(spark, rng):
     # rotated rows force nontrivial pivoting at every level
     m = rng.random((96, 96))
     m = np.roll(m, 37, axis=0)
-    _inverse_check(spark, m, bs=32, leaf=32, placement=placement)
+    _inverse_check(spark, m, bs=32, leaf=32)
 
 
 @pytest.mark.parametrize(
@@ -198,11 +186,18 @@ def test_inverse_pivot_stress(spark, rng, placement="driver"):
     ],
     ids=lambda f: f.__name__.removeprefix("test_"),
 )
-def test_executor_placement(spark, rng, check):
-    """The same checks on frames held only on executors: every leaf
-    runs as ops.leaf_task's executor task, not just the Schur
-    complement's."""
-    check(spark, rng, placement="executor")
+def test_executor_placement(spark, rng, check, monkeypatch):
+    """The same checks on frames held only on executors: every input
+    is pinned with an eager checkpoint, so its blocks live in executor
+    storage instead of a driver-built local relation. Where a leaf
+    runs and what it returns must not depend on how the input was
+    built."""
+    build = BlockMatrixFrame.from_numpy
+    monkeypatch.setattr(
+        BlockMatrixFrame, "from_numpy",
+        staticmethod(lambda s, m, bs: build(s, m, bs).checkpoint(eager=True)),
+    )
+    check(spark, rng)
 
 
 def test_singular_leaf_on_executors_raises(spark, rng):
@@ -210,7 +205,7 @@ def test_singular_leaf_on_executors_raises(spark, rng):
     # LinAlgError raised inside the task must surface with its message
     m = rng.random((64, 64))
     m[:, 1] = m[:, 0]
-    bm = _placed(spark, m, 16, "executor")
+    bm = BlockMatrixFrame.from_numpy(spark, m, 16)
     with pytest.raises(Exception, match="singular leaf"):
         invmod.inverse(bm, leaf_size=32).to_numpy()
 
@@ -256,3 +251,63 @@ def test_gemm_k_chunked_matches_plain(spark, rng):
     # possible here, but no-bias chunked path must also agree
     got = ops.gemm(am, bm, k_chunk=2).to_numpy()
     assert np.abs(got - a @ b).max() < 1e-11
+
+
+
+def _bm(spark, m: np.ndarray) -> BlockMatrixFrame:
+    return BlockMatrixFrame.from_numpy(spark, m, 32)
+
+
+# every BlockMatrixFrame producer: (spark, a) -> its output frames,
+# over the 96x96 SPD matrix ``a`` at block size 32
+_PRODUCERS = {
+    "from_numpy": lambda s, a: [_bm(s, a)],
+    "random_uniform": lambda s, a: [
+        BlockMatrixFrame.random_uniform(s, 96, block_size=32)
+    ],
+    "identity": lambda s, a: [BlockMatrixFrame.identity(s, 96, 32)],
+    "slice_blocks": lambda s, a: [_bm(s, a).slice_blocks(1, 3, 0, 2)],
+    "gemm": lambda s, a: [ops.gemm(_bm(s, a), _bm(s, a))],
+    "gemm_bias": lambda s, a: [
+        ops.gemm(_bm(s, a), _bm(s, a), c=_bm(s, a), alpha=-1.0)
+    ],
+    "gemm_k_chunk": lambda s, a: [
+        ops.gemm(_bm(s, a), _bm(s, a), c=_bm(s, a), alpha=-1.0, k_chunk=2)
+    ],
+    "add": lambda s, a: [ops.add(_bm(s, a), _bm(s, np.tril(a)))],
+    "subtract": lambda s, a: [ops.subtract(_bm(s, np.triu(a)), _bm(s, a))],
+    "scale": lambda s, a: [ops.scale(_bm(s, a), 2.0)],
+    "transpose": lambda s, a: [ops.transpose(_bm(s, a))],
+    "permute_rows": lambda s, a: [
+        ops.permute_rows(_bm(s, a), np.roll(np.arange(96), 37))
+    ],
+    "leaf_task_one": lambda s, a: ops.leaf_task(
+        _bm(s, a), lambda x: (np.linalg.inv(x),), [(96, 96, "full")]
+    ),
+    "leaf_task_many": lambda s, a: ops.leaf_task(
+        _bm(s, a), kernels.lu_factors,
+        [(96, 96, "lower"), (96, 96, "upper"), (1, 96, "full")],
+    ),
+    "lu": lambda s, a: list(lumod.lu(_bm(s, a), leaf_size=32)[1:]),
+    "inverse": lambda s, a: [invmod.inverse(_bm(s, a), leaf_size=32)],
+    "solve": lambda s, a: [
+        invmod.solve(_bm(s, a), _bm(s, a[:, :40]), leaf_size=32)
+    ],
+    "cholesky": lambda s, a: [cholmod.cholesky(_bm(s, a), leaf_size=32)],
+    "tsqr_q": lambda s, a: [qrmod.tsqr(_bm(s, a[:, :16]))[0]],
+    "cg_diag_inv": lambda s, a: [cgmod._diag_inv(_bm(s, a))],
+    "cg_ewise_mul": lambda s, a: [
+        cgmod._ewise_mul(_bm(s, a[:, :1]), _bm(s, a[:, 1:2]))
+    ],
+}
+
+
+@pytest.mark.parametrize("producer", list(_PRODUCERS))
+def test_block_keys_unique(spark, rng, producer):
+    """Every producer emits at most one row per (bi, bj) — the
+    precondition cg.dot_self_and's left join relies on."""
+    m = rng.random((96, 96))
+    a = m @ m.T + 96 * np.eye(96)  # SPD, for cholesky
+    for frame in _PRODUCERS[producer](spark, a):
+        keys = [tuple(r) for r in frame.df.select("bi", "bj").collect()]
+        assert keys and len(keys) == len(set(keys)), (producer, keys)
