@@ -32,7 +32,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from matrixinversion_spark.matrix import ops
-from matrixinversion_spark.matrix.core import BlockMatrixFrame
+from matrixinversion_spark.matrix.core import BlockMatrixFrame, block_diagonal
 from matrixinversion_spark.registry import query
 
 
@@ -173,15 +173,14 @@ def _diag_inv(a: BlockMatrixFrame) -> BlockMatrixFrame:
     are the caller's contract violation (SPD has none)."""
     d = (
         a.df.filter(F.col("bi") == F.col("bj"))
+        .withColumn("data",
+                    F.transform(block_diagonal(), lambda x: 1.0 / x))
         .select(
             "bi",
             F.lit(0).alias("bj"),
             F.col("rows"),
             F.lit(1).alias("cols"),
-            F.expr(
-                "transform(sequence(0, rows - 1),"
-                " i -> 1.0 / data[i * cols + i])"
-            ).alias("data"),
+            "data",
         )
     )
     return BlockMatrixFrame(d, a.n_rows, 1, a.block_size)

@@ -27,11 +27,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
-
 from matrixinversion_spark.matrix import ops
-from matrixinversion_spark.matrix.core import BlockMatrixFrame
-from matrixinversion_spark.matrix.lu import DEFAULT_LEAF, solve_upper_right
+from matrixinversion_spark.matrix.core import BlockMatrixFrame, block_diagonal
+from matrixinversion_spark.matrix.lu import solve_upper_right
 
 
 def cholesky_leaf(a: np.ndarray) -> np.ndarray:
@@ -86,14 +84,11 @@ def chol_logdet(lo: BlockMatrixFrame) -> float:
     factor — callers that need both the factor and the determinant
     (la_cholesky_residual) reuse one factorization instead of paying
     it twice (r14 optimization round, guide §1.2). Only the diagonal
-    blocks of L leave the cluster."""
-    diag_blocks = lo.df.filter("bi = bj").select("bi", "rows", "cols", "data")
+    entries of L leave the cluster."""
+    diags = lo.df.filter("bi = bj").select(block_diagonal().alias("d"))
     total = 0.0
-    for row in diag_blocks.collect():
-        blk = np.asarray(row["data"], dtype=np.float64).reshape(
-            row["rows"], row["cols"]
-        )
-        total += float(np.sum(np.log(np.diag(blk))))
+    for row in diags.collect():
+        total += float(np.sum(np.log(np.asarray(row["d"]))))
     return 2.0 * total
 
 

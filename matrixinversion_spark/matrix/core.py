@@ -17,6 +17,15 @@ is one explicit-schema DataFrame:
   its hand-rolled partitioner (`MyPartitioner`,
   `LUDecomposition.java:653-659`).
 
+The layout is known in this module alone. Python code reads and
+writes blocks through its codec — ``decode_blocks`` (block-schema
+pandas rows → ``(bi, bj, ndarray)``), ``block_array`` (the one
+reshape of a ``data`` cell), ``encode_blocks`` (the reverse),
+``tile`` (ndarray → blocks) and ``assemble`` (blocks → ndarray) —
+and JVM expressions read a diagonal block's diagonal through
+``block_diagonal``. Changing the payload type is a change to these
+functions only.
+
 Scale: a 1e6×1e6 float64 matrix at block_size=1024 is ~1M blocks of
 8 MB — comfortable partition granularity for a 1000-executor cluster,
 and the (bi, bj) key is perfectly uniform so block shuffles never skew.
@@ -24,21 +33,88 @@ and the (bi, bj) key is perfectly uniform so block shuffles never skew.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BLOCK_SCHEMA = "bi int, bj int, rows int, cols int, data array<double>"
+BLOCK_COLUMNS = ["bi", "bj", "rows", "cols", "data"]
 DEFAULT_BLOCK_SIZE = 1024
+
+Block = tuple[int, int, np.ndarray]
 
 
 def _nblocks(n: int, bs: int) -> int:
     return (n + bs - 1) // bs
+
+
+# -- block codec: the one place the payload layout is known -----------
+
+def block_array(data, rows: int, cols: int) -> np.ndarray:
+    """A ``data`` cell as its rows×cols ndarray (row-major)."""
+    return np.asarray(data, dtype=np.float64).reshape(int(rows), int(cols))
+
+
+def decode_blocks(pdf: pd.DataFrame) -> Iterator[Block]:
+    """(bi, bj, ndarray) per row of a pandas frame with the block
+    columns (other columns are ignored)."""
+    for bi, bj, r, c, d in zip(
+        pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
+    ):
+        yield int(bi), int(bj), block_array(d, r, c)
+
+
+def encode_blocks(blocks: Iterable[Block]) -> pd.DataFrame:
+    """Block-schema pandas frame from (bi, bj, ndarray) blocks. The
+    payloads stay ndarrays: Arrow ships them unboxed."""
+    return pd.DataFrame(
+        [(int(bi), int(bj), blk.shape[0], blk.shape[1], blk.ravel())
+         for bi, bj, blk in blocks],
+        columns=BLOCK_COLUMNS,
+    )
+
+
+def tile(a: np.ndarray, bs: int, mask: str = "full",
+         keep_zeros: bool = True) -> Iterator[Block]:
+    """Split ``a`` into bs×bs blocks (ragged at the edges). ``mask``
+    names the blocks kept: ``"full"``, ``"lower"`` (bi ≥ bj) or
+    ``"upper"`` (bi ≤ bj); ``keep_zeros=False`` drops all-zero
+    blocks."""
+    for bi in range(_nblocks(a.shape[0], bs)):
+        for bj in range(_nblocks(a.shape[1], bs)):
+            if mask == "lower" and bj > bi or mask == "upper" and bi > bj:
+                continue
+            blk = a[bi * bs:(bi + 1) * bs, bj * bs:(bj + 1) * bs]
+            if keep_zeros or blk.any():
+                yield bi, bj, blk
+
+
+def assemble(blocks: Iterable[Block], n_rows: int, n_cols: int,
+             bs: int) -> np.ndarray:
+    """The n_rows×n_cols ndarray of ``blocks``; absent blocks are
+    zeros."""
+    out = np.zeros((n_rows, n_cols))
+    for bi, bj, blk in blocks:
+        out[bi * bs:bi * bs + blk.shape[0],
+            bj * bs:bj * bs + blk.shape[1]] = blk
+    return out
+
+
+def block_diagonal() -> Column:
+    """The diagonal of a square block's payload as an array column:
+    entry i sits at row-major offset i·(cols + 1). Select it before
+    re-aliasing ``rows`` or ``cols``: inside its lambda, a sibling
+    alias in the same ``select`` (lateral column alias) wins over the
+    input column."""
+    return F.transform(
+        F.sequence(F.lit(0), F.col("rows") - 1),
+        lambda i: F.element_at("data", i * (F.col("cols") + 1) + 1),
+    )
 
 
 def auto_block_size(n: int, max_grid: int = 8) -> int:
@@ -105,17 +181,6 @@ class BlockMatrixFrame:
         """Driver-side ingest (tests/leaves); zero blocks dropped."""
         a = np.asarray(a, dtype=np.float64)
         n, m = a.shape
-        rows = []
-        for bi in range(_nblocks(n, block_size)):
-            for bj in range(_nblocks(m, block_size)):
-                blk = a[bi * block_size:(bi + 1) * block_size,
-                        bj * block_size:(bj + 1) * block_size]
-                if not keep_zeros and not blk.any():
-                    continue
-                rows.append(
-                    (bi, bj, blk.shape[0], blk.shape[1],
-                     np.ascontiguousarray(blk).ravel())
-                )
         # Arrow path: ndarray payloads serialize without boxing into
         # Python floats (a leaf factor is ~8 MB — list-of-float
         # createDataFrame was the driver bottleneck). Arrow is a
@@ -123,9 +188,7 @@ class BlockMatrixFrame:
         # SparkSession; the non-Arrow fallback type-verifies each cell
         # and rejects numpy.float64, so enable it here rather than
         # assume the caller used our session factory.
-        pdf = pd.DataFrame(
-            rows, columns=["bi", "bj", "rows", "cols", "data"]
-        )
+        pdf = encode_blocks(tile(a, block_size, keep_zeros=keep_zeros))
         # set-and-restore (r4 ADVICE): Arrow conversion happens eagerly
         # inside createDataFrame, so the conf only needs to hold for
         # this call — leaving it flipped would silently change the
@@ -145,10 +208,7 @@ class BlockMatrixFrame:
             except Exception:
                 # Last-resort boxed path (pure-Python floats) for
                 # sessions where Arrow conversion is unavailable.
-                pdf = pdf.assign(
-                    data=[np.asarray(d, dtype=np.float64).tolist()
-                          for d in pdf["data"]]
-                )
+                pdf = pdf.assign(data=[d.tolist() for d in pdf["data"]])
                 df = spark.createDataFrame(pdf, schema=BLOCK_SCHEMA)
         finally:
             try:
@@ -165,8 +225,9 @@ class BlockMatrixFrame:
                        block_size: int = DEFAULT_BLOCK_SIZE,
                        seed: int = 42) -> "BlockMatrixFrame":
         """Distributed seeded uniform(0,1) matrix (reference O1,
-        `data/MakeData.java:9-33` — but reproducible: each block's RNG
-        is seeded by (seed, bi, bj), independent of partitioning)."""
+        `data/MakeData.java:9-33` — but reproducible: block (bi, bj)
+        holds ``default_rng(SeedSequence([seed, bi, bj])).random(r*c)``
+        in row-major order, independent of partitioning)."""
         m = n if m is None else m
         bs = block_size
         nbi, nbj = _nblocks(n, bs), _nblocks(m, bs)
@@ -178,18 +239,15 @@ class BlockMatrixFrame:
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                out = []
+                blocks = []
                 for bi, bj in zip(pdf["bi"], pdf["bj"]):
-                    r = min(bs, n - bi * bs)
-                    c = min(bs, m - bj * bs)
+                    bi, bj = int(bi), int(bj)
                     rng = np.random.default_rng(
-                        np.random.SeedSequence([seed, int(bi), int(bj)])
+                        np.random.SeedSequence([seed, bi, bj])
                     )
-                    out.append((int(bi), int(bj), r, c,
-                                rng.random(r * c)))
-                yield pd.DataFrame(
-                    out, columns=["bi", "bj", "rows", "cols", "data"]
-                )
+                    shape = (min(bs, n - bi * bs), min(bs, m - bj * bs))
+                    blocks.append((bi, bj, rng.random(shape)))
+                yield encode_blocks(blocks)
 
         df = grid.repartition(min(nbi * nbj, 64)).mapInPandas(
             gen, schema=BLOCK_SCHEMA
@@ -204,13 +262,9 @@ class BlockMatrixFrame:
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                out = []
-                for bi in pdf["bi"]:
-                    r = min(bs, n - int(bi) * bs)
-                    out.append((int(bi), int(bi), r, r,
-                                np.eye(r).ravel()))
-                yield pd.DataFrame(
-                    out, columns=["bi", "bj", "rows", "cols", "data"]
+                yield encode_blocks(
+                    (bi, bi, np.eye(min(bs, n - int(bi) * bs)))
+                    for bi in pdf["bi"]
                 )
 
         grid = spark.range(_nblocks(n, bs)).select(
@@ -225,14 +279,9 @@ class BlockMatrixFrame:
         """Collect to a driver ndarray (leaves/tests only — bounded by
         leaf_size in the recursion, same shape as the reference's
         driver-local leaf solve)."""
-        out = np.zeros((self.n_rows, self.n_cols))
-        bs = self.block_size
         pdf = self.df.toPandas()  # Arrow path: cells arrive as ndarrays
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            out[bi * bs:bi * bs + r, bj * bs:bj * bs + c] = blk
+        out = assemble(decode_blocks(pdf), self.n_rows, self.n_cols,
+                       self.block_size)
         # the collect above IS the materialization point: the owned
         # intermediate caches have served their purpose (re-collecting
         # simply recomputes through checkpointed lineage)

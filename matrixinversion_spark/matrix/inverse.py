@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 from matrixinversion_spark.matrix import kernels
-from matrixinversion_spark.matrix.core import BlockMatrixFrame
+from matrixinversion_spark.matrix.core import BlockMatrixFrame, block_diagonal
 from matrixinversion_spark.matrix.lu import (
     DEFAULT_LEAF,
     _concurrently,
@@ -276,18 +276,11 @@ def determinant(a: BlockMatrixFrame,
     from pyspark.sql import functions as F
 
     perm, _lo, up = lu(a, leaf_size)
-    bs = up.block_size
     diag_prod_log = (
         up.df.filter(F.col("bi") == F.col("bj"))
         .select(
             F.aggregate(
-                # diagonal entries of a row-major square block
-                F.transform(
-                    F.sequence(F.lit(0), F.col("rows") - 1),
-                    lambda i: F.element_at(
-                        "data", i * (F.col("cols") + 1) + 1
-                    ),
-                ),
+                block_diagonal(),
                 F.struct(
                     F.lit(0.0).alias("logabs"), F.lit(1.0).alias("sgn")
                 ),

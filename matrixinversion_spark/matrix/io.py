@@ -48,6 +48,8 @@ from matrixinversion_spark.matrix.core import (
     BLOCK_SCHEMA,
     DEFAULT_BLOCK_SIZE,
     BlockMatrixFrame,
+    decode_blocks,
+    encode_blocks,
 )
 
 _HEADER = struct.Struct(">4i")
@@ -168,10 +170,7 @@ def read_reference_matrix(
         ):
             seg = np.asarray(seg, dtype=np.float64)
             blk[int(rib), int(co):int(co) + seg.shape[0]] = seg
-        return pd.DataFrame(
-            [(bi, bj, r, c, blk.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
+        return encode_blocks([(bi, bj, blk)])
 
     blocks = pieces.groupBy("bi", "bj").applyInPandas(assemble, BLOCK_SCHEMA)
     return BlockMatrixFrame(blocks, n_rows, n_cols, bs)
@@ -271,18 +270,9 @@ def save_reference_matrix(m: BlockMatrixFrame, out_dir: str) -> int:
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = 0
-            for bi, bj, r, c, data in zip(
-                pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                blk = np.asarray(data, dtype=np.float64).reshape(
-                    int(r), int(c)
-                )
-                payload = encode_reference_block(
-                    int(bi) * bs, int(bj) * bs, blk
-                )
-                fname = os.path.join(
-                    out_dir, f"A.{int(bi) * nbj + int(bj)}"
-                )
+            for bi, bj, blk in decode_blocks(pdf):
+                payload = encode_reference_block(bi * bs, bj * bs, blk)
+                fname = os.path.join(out_dir, f"A.{bi * nbj + bj}")
                 with open(fname, "wb") as f:
                     f.write(payload)
                 n += 1
@@ -474,21 +464,16 @@ def write_inverse_text(
             out: dict[str, list] = {
                 "n0": [], "n1": [], "row_no": [], "j0": [], "vals": []
             }
-            for bi, bj, r, c, data in zip(
-                pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                blk = np.asarray(data, dtype=np.float64).reshape(
-                    int(r), int(c)
-                )
-                col0 = int(bj) * bs
-                gcols = col0 + np.arange(int(c))
+            for bi, bj, blk in decode_blocks(pdf):
+                col0 = bj * bs
+                gcols = col0 + np.arange(blk.shape[1])
                 for n1 in range(n_l):
                     mask = (gcols % n_l) == n1
                     if not mask.any():
                         continue
                     sub = blk[:, mask]
-                    for li in range(int(r)):
-                        row_no = int(bi) * bs + li
+                    for li in range(blk.shape[0]):
+                        row_no = bi * bs + li
                         out["n0"].append(row_no % n_u)
                         out["n1"].append(n1)
                         out["row_no"].append(row_no)

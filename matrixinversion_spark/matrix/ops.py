@@ -24,6 +24,10 @@ Physical shapes, 100 TB honest:
   read-time row indirection.
 - ``leaf_task`` — every recursion leaf's dense numpy work (leaf LU,
   triangular inversion): one executor task for the whole leaf.
+
+Every Python kernel here reads and writes blocks through the codec
+in ``core`` (``decode_blocks``/``encode_blocks``, ``tile``/
+``assemble``); none knows the payload layout itself.
 """
 
 from __future__ import annotations
@@ -36,10 +40,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from matrixinversion_spark.matrix.core import (
-    BLOCK_SCHEMA, BlockMatrixFrame, _nblocks,
+    BLOCK_COLUMNS, BLOCK_SCHEMA, BlockMatrixFrame, assemble, block_array,
+    decode_blocks, encode_blocks, tile,
 )
-
-_BLOCK_COLS = ["bi", "bj", "rows", "cols", "data"]
 
 
 def multiply(a: BlockMatrixFrame, b: BlockMatrixFrame) -> BlockMatrixFrame:
@@ -105,8 +108,7 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
             pdf["bi"], pdf["bj"], pdf["a_rows"], pdf["a_cols"],
             pdf["b_cols"], pdf["a_data"], pdf["b_data"],
         ):
-            blk_a = np.asarray(ad, dtype=np.float64).reshape(ar, ac)
-            blk_b = np.asarray(bd, dtype=np.float64).reshape(ac, bc)
+            blk_a, blk_b = block_array(ad, ar, ac), block_array(bd, ac, bc)
             yield int(bi), int(bj), alpha * (blk_a @ blk_b)
 
     if k_chunk is not None:
@@ -129,7 +131,7 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
             partials.groupBy("bi", "bj")
             .cogroup(bias_df.groupBy("bi", "bj"))
             .applyInPandas(
-                lambda pdf, bias: _block_sum(_blocks(pdf), bias),
+                lambda pdf, bias: _block_sum(decode_blocks(pdf), bias),
                 BLOCK_SCHEMA,
             )
         )
@@ -149,14 +151,6 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
     return BlockMatrixFrame(out, a.n_rows, b.n_cols, a.block_size)
 
 
-def _blocks(pdf: pd.DataFrame) -> Iterator[tuple]:
-    """(bi, bj, ndarray) per row of a block-schema pandas frame."""
-    for bi, bj, r, c, d in zip(
-        pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-    ):
-        yield int(bi), int(bj), np.asarray(d, dtype=np.float64).reshape(r, c)
-
-
 def _block_sum(terms: Iterator[tuple],
                bias: pd.DataFrame | None = None) -> pd.DataFrame:
     """One output block: the optional bias block plus every
@@ -164,13 +158,10 @@ def _block_sum(terms: Iterator[tuple],
     acc: np.ndarray | None = None
     bi = bj = None
     if bias is not None and len(bias):
-        bi, bj, acc = next(_blocks(bias))
+        bi, bj, acc = next(decode_blocks(bias))
     for bi, bj, p in terms:
         acc = p if acc is None else acc + p
-    return pd.DataFrame(
-        [(bi, bj, acc.shape[0], acc.shape[1], acc.ravel())],
-        columns=_BLOCK_COLS,
-    )
+    return encode_blocks([(bi, bj, acc)])
 
 
 def _axpy(a: BlockMatrixFrame, b: BlockMatrixFrame,
@@ -226,17 +217,8 @@ def transpose(a: BlockMatrixFrame) -> BlockMatrixFrame:
 
     def tr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for bi, bj, r, c, d in zip(
-                pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-                out.append(
-                    (int(bj), int(bi), int(c), int(r),
-                     np.ascontiguousarray(blk.T).ravel())
-                )
-            yield pd.DataFrame(
-                out, columns=["bi", "bj", "rows", "cols", "data"]
+            yield encode_blocks(
+                (bj, bi, blk.T) for bi, bj, blk in decode_blocks(pdf)
             )
 
     out = a.df.mapInPandas(tr, BLOCK_SCHEMA)
@@ -271,30 +253,23 @@ def permute_rows(a: BlockMatrixFrame, perm: np.ndarray) -> BlockMatrixFrame:
 
     joined = a.df.join(F.broadcast(routing), "bi")
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    def gather(pdf: pd.DataFrame) -> pd.DataFrame:
         bi_out = int(pdf["bi_out"].iloc[0])
         bj = int(pdf["bj"].iloc[0])
         cols = int(pdf["cols"].iloc[0])
         r0 = bi_out * bs
         r1 = min(r0 + bs, perm.shape[0])
         out = np.zeros((r1 - r0, cols))
-        for bi_src, r, c, d in zip(
-            pdf["bi"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            src0 = int(bi_src) * bs
+        for bi_src, _, blk in decode_blocks(pdf):
+            src0 = bi_src * bs
             for local_i, global_i in enumerate(range(r0, r1)):
                 src = perm[global_i]
-                if src0 <= src < src0 + int(r):
+                if src0 <= src < src0 + blk.shape[0]:
                     out[local_i] = blk[src - src0]
-        return pd.DataFrame(
-            [(bi_out, bj, out.shape[0], out.shape[1],
-              out.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
+        return encode_blocks([(bi_out, bj, out)])
 
     out = joined.groupBy("bi_out", "bj").applyInPandas(
-        assemble, BLOCK_SCHEMA
+        gather, BLOCK_SCHEMA
     )
     return BlockMatrixFrame(out, a.n_rows, a.n_cols, bs)
 
@@ -308,12 +283,9 @@ def max_abs_diff_from_identity(a: BlockMatrixFrame) -> float:
     def err(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             vals = []
-            for bi, bj, r, c, d in zip(
-                pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                blk = np.asarray(d, dtype=np.float64).reshape(r, c)
+            for bi, bj, blk in decode_blocks(pdf):
                 if bi == bj:
-                    blk = blk - np.eye(r, c)
+                    blk = blk - np.eye(*blk.shape)
                 vals.append(float(np.abs(blk).max()))
             yield pd.DataFrame({"e": vals or [0.0]})
 
@@ -378,26 +350,13 @@ def leaf_task(a: BlockMatrixFrame,
     tagged = len(outputs) > 1
 
     def task(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = np.zeros((n, m))
-        for bi, bj, blk in _blocks(pdf):
-            x[bi * bs:bi * bs + blk.shape[0],
-              bj * bs:bj * bs + blk.shape[1]] = blk
-        out = []
-        for tag, (y, (rows, cols, mask)) in enumerate(
-            zip(kernel(x), outputs)
-        ):
-            for bi in range(_nblocks(rows, bs)):
-                for bj in range(_nblocks(cols, bs)):
-                    if (mask == "lower" and bj > bi
-                            or mask == "upper" and bi > bj):
-                        continue
-                    blk = y[bi * bs:(bi + 1) * bs, bj * bs:(bj + 1) * bs]
-                    out.append(
-                        (tag, bi, bj, blk.shape[0], blk.shape[1],
-                         np.ascontiguousarray(blk).ravel())
-                    )
-        pdf = pd.DataFrame(out, columns=["tag", *_BLOCK_COLS])
-        return pdf if tagged else pdf[_BLOCK_COLS]
+        x = assemble(decode_blocks(pdf), n, m, bs)
+        pdf = pd.concat(
+            [encode_blocks(tile(y, bs, mask)).assign(tag=tag)
+             for tag, (y, (_, _, mask)) in enumerate(zip(kernel(x), outputs))],
+            ignore_index=True,
+        )
+        return pdf if tagged else pdf[BLOCK_COLUMNS]
 
     # a named constant column, not groupBy(lit(1)) — Spark resolves a
     # bare integer literal in groupBy as a GROUP BY ordinal
@@ -414,8 +373,7 @@ def leaf_task(a: BlockMatrixFrame,
     if retained is not None:
         retained.append(df)
     return [
-        BlockMatrixFrame(
-            df.filter(F.col("tag") == i).select(*_BLOCK_COLS), rows, cols, bs
-        )
+        BlockMatrixFrame(df.filter(F.col("tag") == i).select(*BLOCK_COLUMNS),
+                         rows, cols, bs)
         for i, (rows, cols, _) in enumerate(outputs)
     ]

@@ -38,7 +38,9 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from matrixinversion_spark.matrix.core import BLOCK_SCHEMA, BlockMatrixFrame
+from matrixinversion_spark.matrix.core import (
+    BLOCK_SCHEMA, BlockMatrixFrame, decode_blocks, encode_blocks,
+)
 
 _R_SCHEMA = "g int, data array<double>"
 
@@ -66,13 +68,11 @@ def tsqr_r(a: BlockMatrixFrame, fanout: int = 8) -> np.ndarray:
 
     def local_r(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for bi, r, c, d in zip(
-                pdf["bi"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                blk = np.asarray(d, dtype=np.float64).reshape(int(r), int(c))
-                out.append((int(bi), _qr_r(blk).ravel()))
-            yield pd.DataFrame(out, columns=["g", "data"])
+            yield pd.DataFrame(
+                [(bi, _qr_r(blk).ravel())
+                 for bi, _, blk in decode_blocks(pdf)],
+                columns=["g", "data"],
+            )
 
     def reduce_r(pdf: pd.DataFrame) -> pd.DataFrame:
         stacked = np.vstack(
@@ -123,16 +123,8 @@ def tsqr(a: BlockMatrixFrame, fanout: int = 8
 
     def form_q(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for bi, rr, cc, d in zip(
-                pdf["bi"], pdf["rows"], pdf["cols"], pdf["data"]
-            ):
-                blk = np.asarray(d, dtype=np.float64).reshape(
-                    int(rr), int(cc))
-                q = blk @ rinv
-                out.append((int(bi), 0, q.shape[0], q.shape[1], q.ravel()))
-            yield pd.DataFrame(
-                out, columns=["bi", "bj", "rows", "cols", "data"]
+            yield encode_blocks(
+                (bi, 0, blk @ rinv) for bi, _, blk in decode_blocks(pdf)
             )
 
     qdf = a.df.mapInPandas(form_q, schema=BLOCK_SCHEMA)

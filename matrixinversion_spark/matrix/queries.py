@@ -21,7 +21,9 @@ from pyspark.sql import functions as F
 from matrixinversion_spark.matrix import inverse as invmod
 from matrixinversion_spark.matrix import lu as lumod
 from matrixinversion_spark.matrix import ops
-from matrixinversion_spark.matrix.core import BLOCK_SCHEMA, BlockMatrixFrame
+from matrixinversion_spark.matrix.core import (
+    BLOCK_SCHEMA, BlockMatrixFrame, decode_blocks, encode_blocks,
+)
 from matrixinversion_spark.registry import query
 from matrixinversion_spark.session import read_table
 
@@ -74,11 +76,11 @@ def _pinned_exec(spark: SparkSession, grid_blocks: int):
         conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
-def _lineitem_matrix(spark: SparkSession, sf_dir: str) -> BlockMatrixFrame:
-    """Deterministic 64×64 matrix from lineitem:
+def _lineitem_coo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic 64×64 matrix from lineitem as COO rows (i, j, v):
     M[i,j] = round(Σ l_quantity, 6) over (l_partkey%64, l_suppkey%64)."""
     li = read_table(spark, sf_dir, "lineitem")
-    coo = (
+    return (
         li.groupBy(
             (F.col("l_partkey") % _DIM).cast("int").alias("i"),
             (F.col("l_suppkey") % _DIM).cast("int").alias("j"),
@@ -86,18 +88,41 @@ def _lineitem_matrix(spark: SparkSession, sf_dir: str) -> BlockMatrixFrame:
         .agg(F.round(F.sum("l_quantity"), 6).alias("v"))
     )
 
+
+def _lineitem_matrix(spark: SparkSession, sf_dir: str) -> BlockMatrixFrame:
+    """:func:`_lineitem_coo` as one 64×64 block."""
+
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         blk = np.zeros((_DIM, _DIM))
         blk[pdf["i"].to_numpy(), pdf["j"].to_numpy()] = pdf["v"].to_numpy()
-        return pd.DataFrame(
-            [(0, 0, _DIM, _DIM, blk.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
+        return encode_blocks([(0, 0, blk)])
 
-    df = coo.withColumn("bi", F.lit(0)).groupBy("bi").applyInPandas(
-        assemble, BLOCK_SCHEMA
+    df = (
+        _lineitem_coo(spark, sf_dir).withColumn("bi", F.lit(0))
+        .groupBy("bi").applyInPandas(assemble, BLOCK_SCHEMA)
     )
     return BlockMatrixFrame(df, _DIM, _DIM, _DIM)
+
+
+def _coo(m: BlockMatrixFrame) -> DataFrame:
+    """The cells of ``m`` that are nonzero at 3 decimals, as COO rows
+    (i, j, val) rounded to 3 decimals."""
+    bs = m.block_size
+
+    def to_coo(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for bi, bj, blk in decode_blocks(pdf):
+            ii, jj = np.nonzero(np.round(blk, 3))
+            for i, j in zip(ii, jj):
+                out.append(
+                    (bi * bs + int(i), bj * bs + int(j),
+                     float(np.round(blk[i, j], 3)))
+                )
+        return pd.DataFrame(out, columns=["i", "j", "val"])
+
+    return m.df.groupBy("bi", "bj").applyInPandas(
+        to_coo, "i int, j int, val double"
+    )
 
 
 @query(
@@ -120,25 +145,7 @@ def la_matmul_coo(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a relational matmul oracle (the Schur-complement core O11
     — `LUDecomposition.java:495-651` — is exactly this dataflow)."""
     m = _lineitem_matrix(spark, sf_dir)
-    g = ops.multiply(m, ops.transpose(m))
-
-    def to_coo(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            ii, jj = np.nonzero(np.round(blk, 3))
-            for i, j in zip(ii, jj):
-                out.append(
-                    (int(bi) * _DIM + int(i), int(bj) * _DIM + int(j),
-                     float(np.round(blk[i, j], 3)))
-                )
-        return pd.DataFrame(out, columns=["i", "j", "val"])
-
-    return g.df.groupBy("bi", "bj").applyInPandas(
-        to_coo, "i int, j int, val double"
-    )
+    return _coo(ops.multiply(m, ops.transpose(m)))
 
 
 @query(
@@ -215,25 +222,7 @@ def la_add_transpose_coo(spark: SparkSession, sf_dir: str) -> DataFrame:
     add / scale / transpose block ops (the element-wise layer under
     the Schur update, reference `LUDecomposition.java:624-628`)."""
     m = _lineitem_matrix(spark, sf_dir)
-    b = ops.add(ops.scale(m, 2.0), ops.transpose(m))
-
-    def to_coo(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            ii, jj = np.nonzero(np.round(blk, 3))
-            for i, j in zip(ii, jj):
-                out.append(
-                    (int(bi) * _DIM + int(i), int(bj) * _DIM + int(j),
-                     float(np.round(blk[i, j], 3)))
-                )
-        return pd.DataFrame(out, columns=["i", "j", "val"])
-
-    return b.df.groupBy("bi", "bj").applyInPandas(
-        to_coo, "i int, j int, val double"
-    )
+    return _coo(ops.add(ops.scale(m, 2.0), ops.transpose(m)))
 
 
 @query(
@@ -312,16 +301,12 @@ def la_reference_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            v = np.asarray(d, dtype=np.float64)
-            out.append(
-                (int(bi), int(bj), int(r), int(c),
-                 float(np.round(v.sum(), 3)),
-                 float(np.round((v * v).sum(), 3)))
-            )
+        out = [
+            (bi, bj, blk.shape[0], blk.shape[1],
+             float(np.round(blk.sum(), 3)),
+             float(np.round((blk * blk).sum(), 3)))
+            for bi, bj, blk in decode_blocks(pdf)
+        ]
         return pd.DataFrame(
             out,
             columns=["bi", "bj", "n_rows", "n_cols", "val_sum",
@@ -453,53 +438,23 @@ def la_matmul_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k=4, k_chunk=2 → two partial products per output block plus a
     merge-sum shuffle)."""
     bs = 16
-    li = read_table(spark, sf_dir, "lineitem")
-    coo = (
-        li.groupBy(
-            (F.col("l_partkey") % _DIM).cast("int").alias("i"),
-            (F.col("l_suppkey") % _DIM).cast("int").alias("j"),
-        )
-        .agg(F.round(F.sum("l_quantity"), 6).alias("v"))
-    )
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bi, bj = int(key[0]), int(key[1])
         blk = np.zeros((bs, bs))
         blk[pdf["i"].to_numpy() % bs, pdf["j"].to_numpy() % bs] = (
             pdf["v"].to_numpy()
         )
-        return pd.DataFrame(
-            [(bi, bj, bs, bs, blk.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
+        return encode_blocks([(key[0], key[1], blk)])
 
     blocks = (
-        coo.groupBy(
+        _lineitem_coo(spark, sf_dir).groupBy(
             (F.col("i") / bs).cast("int").alias("bi"),
             (F.col("j") / bs).cast("int").alias("bj"),
         )
         .applyInPandas(assemble, BLOCK_SCHEMA)
     )
     m = BlockMatrixFrame(blocks, _DIM, _DIM, bs)
-    g = ops.gemm(m, ops.transpose(m), k_chunk=2)
-
-    def to_coo(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            ii, jj = np.nonzero(np.round(blk, 3))
-            for i, j in zip(ii, jj):
-                out.append(
-                    (int(bi) * bs + int(i), int(bj) * bs + int(j),
-                     float(np.round(blk[i, j], 3)))
-                )
-        return pd.DataFrame(out, columns=["i", "j", "val"])
-
-    return g.df.groupBy("bi", "bj").applyInPandas(
-        to_coo, "i int, j int, val double"
-    )
+    return _coo(ops.gemm(m, ops.transpose(m), k_chunk=2))
 
 
 @query(
@@ -833,19 +788,9 @@ def la_inverse_text_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     def cells(batches):
         for pdf in batches:
             rows = []
-            for bi, bj, r, c, d in zip(
-                pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"],
-                pdf["data"],
-            ):
-                blk = np.asarray(d, dtype=np.float64).reshape(
-                    int(r), int(c)
-                )
-                for li in range(int(r)):
-                    for lj in range(int(c)):
-                        rows.append(
-                            (int(bi) * 8 + li, int(bj) * 8 + lj,
-                             float(blk[li, lj]))
-                        )
+            for bi, bj, blk in decode_blocks(pdf):
+                for (li, lj), v in np.ndenumerate(blk):
+                    rows.append((bi * 8 + li, bj * 8 + lj, float(v)))
             yield pd.DataFrame(
                 rows, columns=["row_no", "col_no", "orig"]
             )

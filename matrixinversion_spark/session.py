@@ -18,7 +18,27 @@ from pyspark.sql import SparkSession
 # ~2-3x total cores, maxPartitionBytes 128-256MB).
 
 
-def _default_shuffle_partitions() -> str:
+def _graft_cpus() -> int | None:
+    """The local core count ``SPARK_GRAFT_CPUS`` names, or None when
+    it is unset — the one read of the variable: the master URL and the
+    shuffle-partition default both follow it. Anything but a positive
+    integer (``16.0``, ``0``, a typo) raises instead of reaching the
+    JVM as an unparsable ``local[...]`` master (ADVICE r13)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return None
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer"
+        )
+    return cpus
+
+
+def _shuffle_partitions(cpus: int | None) -> str:
     """Scale-adaptive shuffle-partition default (r13 optimization
     round, guide §2.2/§2.5): derive from the harness core count
     instead of pinning the local[32] constant — the driver also runs
@@ -26,31 +46,16 @@ def _default_shuffle_partitions() -> str:
     partitions of a tiny shuffle are pure task overhead. Floor of 8
     keeps AQE coalescing meaningful; at SPARK_GRAFT_CPUS=32 this is
     exactly the historical 32, so the 32-core bench fingerprints are
-    unchanged. On a real cluster the submit conf overrides this
-    (2-3x total cores), as documented above."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    try:
-        return str(max(8, int(cpus)))
-    except ValueError:
-        if cpus:
-            # malformed override (e.g. "16.0" or a typo): warn instead
-            # of silently benchmarking at the historical constant
-            # (ADVICE r13)
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_CPUS={cpus!r} is not an integer; "
-                "falling back to 32 shuffle partitions",
-                stacklevel=2,
-            )
-        return "32"
+    unchanged; unset, it is that constant. On a real cluster the
+    submit conf overrides this (2-3x total cores), as documented
+    above."""
+    return "32" if cpus is None else str(max(8, cpus))
 
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": _default_shuffle_partitions(),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
@@ -80,9 +85,11 @@ def get_spark(app_name: str = "matrixinversion_spark",
               master: str | None = None,
               extra_confs: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = _graft_cpus()
     builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or f"local[{cpus}]")
+    builder = builder.master(master or f"local[{cpus or '*'}]")
+    builder = builder.config("spark.sql.shuffle.partitions",
+                             _shuffle_partitions(cpus))
     for k, v in DEFAULT_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_confs or {}).items():

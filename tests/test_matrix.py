@@ -14,7 +14,9 @@ from matrixinversion_spark.matrix import kernels
 from matrixinversion_spark.matrix import lu as lumod
 from matrixinversion_spark.matrix import ops
 from matrixinversion_spark.matrix import qr as qrmod
-from matrixinversion_spark.matrix.core import BlockMatrixFrame
+from matrixinversion_spark.matrix.core import (
+    BlockMatrixFrame, assemble, decode_blocks, encode_blocks, tile,
+)
 
 
 @pytest.fixture(scope="module")
@@ -77,6 +79,69 @@ def test_random_uniform_deterministic(spark):
     b = BlockMatrixFrame.random_uniform(spark, 64, block_size=32, seed=7)
     assert np.abs(a.to_numpy() - b.to_numpy()).max() == 0
     assert 0.0 < a.to_numpy().mean() < 1.0
+
+
+def test_random_uniform_seeding_rule(spark):
+    """Block (bi, bj) is default_rng(SeedSequence([seed, bi, bj]))
+    .random(r*c) in row-major order — the rule the benchmark's
+    dense_inverse check rebuilds A from."""
+    n, m, bs, seed = 70, 45, 32, 7
+    pdf = BlockMatrixFrame.random_uniform(
+        spark, n, m, block_size=bs, seed=seed
+    ).df.toPandas()
+    assert len(pdf) == 3 * 2
+    for bi, bj, r, c, d in zip(
+        pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
+    ):
+        assert (r, c) == (min(bs, n - bi * bs), min(bs, m - bj * bs))
+        want = np.random.default_rng(
+            np.random.SeedSequence([seed, int(bi), int(bj)])
+        ).random(r * c)
+        assert np.array_equal(np.asarray(d), want), (bi, bj)
+
+
+# block codec (core.py), no Spark: ragged shapes — n not a multiple
+# of the block size, and a 1×n row
+_RAGGED = [((7, 5), 3), ((70, 45), 32), ((1, 9), 4), ((9, 1), 4),
+           ((4, 4), 4)]
+
+
+def test_codec_round_trips_ragged_shapes(rng):
+    for (n, m), bs in _RAGGED:
+        a = rng.random((n, m))
+        blocks = list(tile(a, bs))
+        assert len(blocks) == -(-n // bs) * -(-m // bs)
+        assert np.array_equal(assemble(blocks, n, m, bs), a)
+        pdf = encode_blocks(blocks)
+        assert list(pdf.columns) == ["bi", "bj", "rows", "cols", "data"]
+        back = list(decode_blocks(pdf))
+        assert [k[:2] for k in back] == [k[:2] for k in blocks]
+        for (_, _, got), (_, _, want) in zip(back, blocks):
+            assert got.shape == want.shape and np.array_equal(got, want)
+        assert np.array_equal(assemble(back, n, m, bs), a)
+
+
+def test_tile_masks(rng):
+    a = rng.random((7, 8))  # 3×3 grid at bs=3, ragged last row/col
+    keys = {mask: [(bi, bj) for bi, bj, _ in tile(a, 3, mask)]
+            for mask in ("full", "lower", "upper")}
+    grid = [(bi, bj) for bi in range(3) for bj in range(3)]
+    assert keys["full"] == grid
+    assert keys["lower"] == [(bi, bj) for bi, bj in grid if bi >= bj]
+    assert keys["upper"] == [(bi, bj) for bi, bj in grid if bi <= bj]
+    # a masked tiling still assembles the kept triangle of blocks
+    lower = assemble(tile(a, 3, "lower"), 7, 8, 3)
+    assert np.array_equal(lower[3:, :3], a[3:, :3])
+    assert not lower[:3, 3:].any()
+
+
+def test_tile_zero_blocks():
+    a = np.zeros((5, 5))
+    a[4, 0] = 1.0  # only block (1, 0) at bs=3 is nonzero
+    assert [k[:2] for k in tile(a, 3)] == [(0, 0), (0, 1), (1, 0), (1, 1)]
+    assert [k[:2] for k in tile(a, 3, keep_zeros=False)] == [(1, 0)]
+    assert np.array_equal(assemble(tile(a, 3, keep_zeros=False), 5, 5, 3),
+                          a)
 
 
 def test_lu_residual_and_structure(spark, rng):
