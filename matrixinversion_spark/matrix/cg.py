@@ -1,28 +1,25 @@
-"""Distributed conjugate-gradient solver on BlockMatrixFrame.
+"""Iterative solvers on BlockMatrixFrame: conjugate gradients (SPD)
+and BiCGSTAB (general nonsingular A).
 
 The iterative counterpart of the reference's direct solve: where
 `LUDecomposition.java` factors A once and back-substitutes
-(O(N^3) flops, the whole block tree materialized), CG touches A
-only through matrix-vector products — O(N^2) per iteration, K
-iterations, nothing factored or stored beyond three n-vectors. For
-huge sparse or well-conditioned SPD systems that trade is the only
-one that fits in memory, which is why it is the standard companion
-to a direct solver in any linear-algebra engine.
+(O(N^3) flops, the whole block tree materialized), these touch A
+only through matrix-vector products — O(N^2) per product, K
+iterations, nothing factored.
 
-Execution shape per iteration: ONE distributed gemm (A·p — the
-same fused one-shuffle SUMMA join as the LU pipeline, `ops.gemm`)
-plus two JVM-side vector dots (zip_with multiply + aggregate —
-per-block partials, one bounded scalar to the driver each) and two
-axpy block joins. The driver holds only alpha/beta scalars; the
-vectors stay distributed and are checkpointed each iteration
-(``BlockMatrixFrame.checkpoint``: eager for the vectors the next dot
-reads, lazy for x) so lineage stays O(1) instead of O(iterations).
+Execution shape: A stays a distributed frame; every n-vector lives
+on the driver as a numpy array. Each product A·p is one
+``ops.matvec`` — one narrow job, p broadcast, no shuffle — and the
+dots and axpys are driver numpy. For a dense matrix n is the square
+root of its size, so the vectors are small: at 100 TB (n ≈ 3.5e6) an
+n-vector is 28 MB. No vector lineage exists, so nothing is
+checkpointed between iterations.
 
 Reference provenance: extends the solve surface of
 `LUDecomposition.java:410-493` (triangular solves) and
 `Inverse.java:28-40` (driver pipeline); the reference has no
 iterative path — this is the Spark-native addition a user of the
-reference would need for SPD systems too large to factor.
+reference would need for systems too large to factor.
 """
 
 from __future__ import annotations
@@ -36,70 +33,21 @@ from matrixinversion_spark.matrix.core import BlockMatrixFrame, block_diagonal
 from matrixinversion_spark.registry import query
 
 
-def dot(a: BlockMatrixFrame, b: BlockMatrixFrame) -> float:
-    """Global <a, b> over equal-shaped frames — per-block zip_with
-    multiply + aggregate (JVM, codegen), inner join on coordinates
-    (an absent block on either side contributes zero), one scalar
-    to the driver."""
-    la = a.df.select("bi", "bj", F.col("data").alias("a_data"))
-    rb = b.df.select("bi", "bj", F.col("data").alias("b_data"))
-    per = la.join(rb, ["bi", "bj"], "inner").select(
-        F.aggregate(
-            F.zip_with("a_data", "b_data", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("s")
+def _rhs(a: BlockMatrixFrame, b: BlockMatrixFrame) -> np.ndarray:
+    """b as a driver vector, after checking A is square and b is
+    ``a.n_cols``×1 — before any Spark job runs."""
+    if a.n_rows != a.n_cols or (b.n_rows, b.n_cols) != (a.n_cols, 1):
+        raise ValueError(
+            f"shape mismatch: A is {a.n_rows}x{a.n_cols}, b is "
+            f"{b.n_rows}x{b.n_cols}; need square A and b {a.n_cols}x1"
+        )
+    return b.to_numpy()[:, 0]
+
+
+def _solution(a: BlockMatrixFrame, x: np.ndarray) -> BlockMatrixFrame:
+    return BlockMatrixFrame.from_numpy(
+        a.df.sparkSession, x[:, None], block_size=a.block_size
     )
-    out = per.agg(F.sum("s")).collect()[0][0]
-    return float(out) if out is not None else 0.0
-
-
-def dot_self_and(a: BlockMatrixFrame,
-                 c: BlockMatrixFrame) -> tuple[float, float]:
-    """(<a, a>, <a, c>) in ONE join + aggregate + collect — the
-    fused form for loops that take two dots against the same left
-    vector back-to-back (BiCGSTAB's ||t||² and <t, s> per
-    iteration, CG's ||r||² and <r, z> — r14 per VERDICT r13 #5);
-    r13 optimization round: each saved collect is a blocking driver
-    round-trip per iteration. LEFT join on ``c`` so a block absent
-    from ``c`` contributes zero to <a, c> without dropping its
-    <a, a> term — bit-identical to two ``dot`` calls PROVIDED ``c``
-    has at most one row per (bi, bj): a duplicate block key in ``c``
-    would fan the left join out and inflate the <a, a> term, a
-    failure mode two separate ``dot`` calls never had (ADVICE r13).
-    BlockMatrixFrame enforces block-key uniqueness by construction —
-    every producer emits one row per coordinate — so this is a
-    documented precondition, not a runtime check; it is asserted for
-    every producer by ``tests/test_matrix.py::test_block_keys_unique``."""
-    la = a.df.select("bi", "bj", F.col("data").alias("a_data"))
-    rc = c.df.select("bi", "bj", F.col("data").alias("c_data"))
-    per = la.join(rc, ["bi", "bj"], "left").select(
-        F.aggregate(
-            F.zip_with("a_data", "a_data", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("s_aa"),
-        F.coalesce(
-            F.aggregate(
-                F.zip_with("a_data", "c_data", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            F.lit(0.0),
-        ).alias("s_ac"),
-    )
-    row = per.agg(F.sum("s_aa"), F.sum("s_ac")).collect()[0]
-    return (
-        float(row[0]) if row[0] is not None else 0.0,
-        float(row[1]) if row[1] is not None else 0.0,
-    )
-
-
-# Force an eager checkpoint of the (otherwise lazily checkpointed)
-# solution vector every K iterations: bounds the lazy-checkpoint chain
-# depth and the retained intermediate blocks at K while keeping
-# ~(K-1)/K of the saved per-iteration checkpoint jobs (ADVICE r13).
-_X_PIN_EVERY = 25
 
 
 def cg_solve(
@@ -110,95 +58,50 @@ def cg_solve(
     precondition: str | None = None,
 ) -> tuple[BlockMatrixFrame, int, float]:
     """Solve A·x = b for SPD A by (optionally preconditioned)
-    conjugate gradients.
+    conjugate gradients, one ``ops.matvec`` per iteration.
 
     Returns (x, iterations, final ||r||_2). ``tol`` is RELATIVE to
     ||b||_2 (stop when ||r|| <= tol*||b||) — the standard CG
     criterion; an absolute test would over- or under-iterate with
     the scale of b. ``precondition='jacobi'`` divides residuals by
-    diag(A) (extracted JVM-side, one narrow map) — the cheap fix
-    for badly row/column-scaled systems, where plain CG's iteration
-    count grows with the diagonal spread (pinned by the pytest's
-    1e6-spread comparison). Caller guarantees A is symmetric
-    positive definite — CG silently diverges otherwise.
+    diag(A), collected once — the cheap fix for badly row/column-
+    scaled systems, where plain CG's iteration count grows with the
+    diagonal spread. Caller guarantees A is symmetric positive
+    definite — CG silently diverges otherwise.
     """
-    spark = a.df.sparkSession
-    n = a.n_rows
     if precondition not in (None, "jacobi"):
         raise ValueError(f"unknown preconditioner {precondition!r}")
-    dinv = _diag_inv(a) if precondition == "jacobi" else None
-    x = BlockMatrixFrame.from_numpy(
-        spark, np.zeros((n, 1)), block_size=a.block_size, keep_zeros=True
-    )
-    r = b.checkpoint(eager=True)  # r0 = b - A·0 = b
-    z = _ewise_mul(r, dinv) if dinv is not None else r
+    r = _rhs(a, b)  # r0 = b - A·0 = b
+    dinv = 1.0 / _diagonal(a) if precondition == "jacobi" else 1.0
+    x = np.zeros(a.n_rows)
+    z = r * dinv
     p = z
-    rr = dot(r, r)
-    rz = dot(r, z) if dinv is not None else rr
+    rr = r @ r
+    rz = r @ z
     stop = (tol * tol) * max(rr, 1e-300)  # rr0 == ||b||^2 at x0 = 0
     it = 0
     while it < max_iter and rr > stop:
-        # A·p is consumed TWICE (the alpha dot and the r update);
-        # persist so the matvec — the iteration's dominant cost —
-        # executes once (r13 optimization round: the unpersisted form
-        # re-ran the SUMMA join per consumer, i.e. 2 matvecs per
-        # iteration). The dot's collect materializes the cache; the
-        # eager r checkpoint below reads it; unpersist immediately after.
-        ap = ops.multiply(a, p)
-        ap.df.persist()
-        alpha = rz / dot(p, ap)
-        x = ops._axpy(x, p, alpha).checkpoint(
-            eager=(it % _X_PIN_EVERY == _X_PIN_EVERY - 1))
-        r = ops._axpy(r, ap, -alpha).checkpoint(eager=True)
-        ap.df.unpersist()
-        if dinv is not None:
-            # fused (||r||², <r, z>) — one collect instead of two per
-            # preconditioned iteration (r14, VERDICT r13 #5; see
-            # dot_self_and)
-            z = _ewise_mul(r, dinv).checkpoint(eager=True)
-            rr, rz_new = dot_self_and(r, z)
-        else:
-            rr = dot(r, r)
-            z, rz_new = r, rr
-        p = ops._axpy(z, p, rz_new / rz).checkpoint(eager=True)
+        ap = ops.matvec(a, p)
+        alpha = rz / (p @ ap)
+        x = x + alpha * p
+        r = r - alpha * ap
+        z = r * dinv
+        rr, rz_new = r @ r, r @ z
+        p = z + (rz_new / rz) * p
         rz = rz_new
         it += 1
-    return x, it, float(np.sqrt(rr))
+    return _solution(a, x), it, float(np.sqrt(rr))
 
 
-def _diag_inv(a: BlockMatrixFrame) -> BlockMatrixFrame:
-    """1/diag(A) as an n×1 block vector — diagonal blocks only
-    (bi == bj filter pushes to the scan), per-block gather via a JVM
-    ``transform`` over the flattened payload. Zero diagonal entries
-    are the caller's contract violation (SPD has none)."""
-    d = (
-        a.df.filter(F.col("bi") == F.col("bj"))
-        .withColumn("data",
-                    F.transform(block_diagonal(), lambda x: 1.0 / x))
-        .select(
-            "bi",
-            F.lit(0).alias("bj"),
-            F.col("rows"),
-            F.lit(1).alias("cols"),
-            "data",
-        )
-    )
-    return BlockMatrixFrame(d, a.n_rows, 1, a.block_size)
-
-
-def _ewise_mul(v: BlockMatrixFrame, w: BlockMatrixFrame) -> BlockMatrixFrame:
-    """Elementwise product of two equal-shaped block vectors
-    (zip_with, inner join on coordinates)."""
-    lv = v.df.select("bi", "bj", "rows", "cols", F.col("data").alias("a"))
-    rw = w.df.select("bi", "bj", F.col("data").alias("b"))
-    out = lv.join(rw, ["bi", "bj"]).select(
-        "bi",
-        "bj",
-        "rows",
-        "cols",
-        F.zip_with("a", "b", lambda x, y: x * y).alias("data"),
-    )
-    return BlockMatrixFrame(out, v.n_rows, v.n_cols, v.block_size)
+def _diagonal(a: BlockMatrixFrame) -> np.ndarray:
+    """diag(A) on the driver: the diagonal blocks' diagonals, one
+    collect. An absent diagonal block reads as zeros."""
+    bs = a.block_size
+    d = np.zeros(a.n_rows)
+    for bi, diag in (a.df.filter(F.col("bi") == F.col("bj"))
+                     .select("bi", block_diagonal()).collect()):
+        d[bi * bs:bi * bs + len(diag)] = diag
+    return d
 
 
 def bicgstab_solve(
@@ -211,32 +114,24 @@ def bicgstab_solve(
     (van der Vorst, SISC 1992) — the iterative companion CG cannot
     be: CG's short recurrence requires SPD, while BiCGSTAB's
     stabilized bi-Lanczos needs only that A be nonsingular, at the
-    price of TWO matvecs per iteration instead of one.
-
-    Execution shape per iteration: two distributed gemms (A·p, A·s —
-    the same fused one-shuffle SUMMA join) + four bounded-scalar
-    dots + five axpy block joins; vectors stay distributed and are
-    checkpointed per step exactly like ``cg_solve``. Returns
-    (x, iterations, final ||r||₂); ``tol`` is relative to ||b||₂.
+    price of TWO ``ops.matvec`` per iteration instead of one.
+    Returns (x, iterations, final ||r||₂); ``tol`` is relative to
+    ||b||₂.
 
     Raises on bi-Lanczos breakdown (ρ or ω numerically zero) — the
     textbook restart-or-switch-solver condition, surfaced rather
     than silently looped on.
     """
-    spark = a.df.sparkSession
-    n = a.n_rows
-    x = BlockMatrixFrame.from_numpy(
-        spark, np.zeros((n, 1)), block_size=a.block_size, keep_zeros=True
-    )
-    r = b.checkpoint(eager=True)  # r0 = b - A·0
+    r = _rhs(a, b)  # r0 = b - A·0
     rhat = r  # fixed shadow residual
-    rr = dot(r, r)
+    x = np.zeros(a.n_rows)
+    rr = r @ r
     stop = (tol * tol) * max(rr, 1e-300)
     rho = alpha = omega = 1.0
     v = p = None
     it = 0
     while it < max_iter and rr > stop:
-        rho_new = dot(rhat, r)
+        rho_new = rhat @ r
         if abs(rho_new) < 1e-300:
             raise RuntimeError(
                 "BiCGSTAB breakdown: <rhat, r> vanished "
@@ -247,12 +142,9 @@ def bicgstab_solve(
             p = r
         else:
             beta = (rho_new / rho) * (alpha / omega)
-            # p = r + beta·(p − omega·v)
-            p = ops._axpy(
-                ops._axpy(r, p, beta), v, -beta * omega
-            ).checkpoint(eager=True)
-        v = ops.multiply(a, p).checkpoint(eager=True)
-        rv = dot(rhat, v)
+            p = r + beta * (p - omega * v)
+        v = ops.matvec(a, p)
+        rv = rhat @ v
         if abs(rv) < 1e-300:
             raise RuntimeError(
                 f"BiCGSTAB breakdown: <rhat, A·p> vanished "
@@ -260,33 +152,30 @@ def bicgstab_solve(
                 "residual or use a direct solve"
             )
         alpha = rho_new / rv
-        s = ops._axpy(r, v, -alpha).checkpoint(eager=True)
-        ss = dot(s, s)
+        s = r - alpha * v
+        ss = s @ s
         if ss <= stop:  # converged at the half-step
-            x = ops._axpy(x, p, alpha).checkpoint()
+            x = x + alpha * p
             rr = ss
             it += 1
             break
-        t = ops.multiply(a, s).checkpoint(eager=True)
-        # fused (||t||², <t, s>) — one collect instead of two per
-        # iteration (r13 optimization round, see dot_self_and)
-        tt, ts = dot_self_and(t, s)
+        t = ops.matvec(a, s)
+        tt = t @ t
         if tt < 1e-300:
             raise RuntimeError(
                 f"BiCGSTAB breakdown: ||A·s|| vanished (iteration {it})"
             )
-        omega = ts / tt
+        omega = (t @ s) / tt
         if abs(omega) < 1e-300:
             raise RuntimeError(
                 f"BiCGSTAB breakdown: omega vanished (iteration {it})"
             )
-        x = ops._axpy(ops._axpy(x, p, alpha), s, omega).checkpoint(
-            eager=(it % _X_PIN_EVERY == _X_PIN_EVERY - 1))
-        r = ops._axpy(s, t, -omega).checkpoint(eager=True)
-        rr = dot(r, r)
+        x = x + alpha * p + omega * s
+        r = s - omega * t
+        rr = r @ r
         rho = rho_new
         it += 1
-    return x, it, float(np.sqrt(rr))
+    return _solution(a, x), it, float(np.sqrt(rr))
 
 
 @query(

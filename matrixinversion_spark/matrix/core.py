@@ -312,23 +312,16 @@ class BlockMatrixFrame:
 
     def checkpoint(self, eager: bool = False) -> "BlockMatrixFrame":
         """The same matrix with its lineage truncated
-        (``localCheckpoint``); ``retained`` rides along. Recursive and
-        iterative plans otherwise grow without bound — per recursion
-        level in LU (the reference materializes each level on HDFS
-        instead), by two joins per CG iteration until the driver
-        chokes on analysis (the failure the iterative
-        connected-components loop hit in round 6).
+        (``localCheckpoint``); ``retained`` rides along. Recursive
+        plans otherwise grow without bound — per recursion level in LU
+        and Cholesky (the reference materializes each level on HDFS
+        instead) — and a matrix read by every step of an iterative
+        loop is pinned once.
 
         ``eager=True`` materializes now, in its own job — right for a
-        vector the next step reads at once (CG's residual, read by the
-        following dot). The lazy default defers materialization to the
-        frame's first consumer, saving that job for a frame nothing
-        reads until later (CG's solution vector x, r13). A chain of
-        MANY lazy pins needs an eager one every few dozen steps: each
-        lazy checkpoint keeps its parent's blocks referenced until
-        first materialization, so an unbounded chain retains every
-        iterate and materializes as one deep job cascade at the end
-        (ADVICE r13; ``cg._X_PIN_EVERY``)."""
+        frame the next step reads at once. The lazy default defers
+        materialization to the frame's first consumer, saving that job
+        for a frame nothing reads until later."""
         return BlockMatrixFrame(
             self.df.localCheckpoint(eager=eager), self.n_rows,
             self.n_cols, self.block_size, retained=self.retained,

@@ -1,5 +1,6 @@
 """Distributed block-matrix operators: multiply, add/subtract,
-transpose, row permutation, residual norms, and the leaf task.
+transpose, matrix-vector product, row permutation, residual norms,
+and the leaf task.
 
 Reference analogues (SURVEY.md §2.1): the Schur-complement reducer's
 grid matmul + subtract (O11, `LUDecomposition.java:495-651`), the
@@ -18,6 +19,10 @@ Physical shapes, 100 TB honest:
   absent blocks are zeros. No Python.
 - ``transpose`` — per-block numpy transpose + (bi,bj) swap; block
   remap only, no shuffle (narrow dependency).
+- ``matvec`` — A·x for a driver-held vector x: x is broadcast, each
+  task sums its blocks' products per block row, the driver adds the
+  partial rows. One narrow job, no shuffle; the iterative solvers'
+  only distributed step.
 - ``permute_rows`` — the pivot gather: a driver-built (tiny) block
   routing table joined to the blocks, then per-output-block row
   assembly. Replaces the reference's recursive pivot composition and
@@ -157,6 +162,11 @@ def _block_sum(terms: Iterator[tuple],
     (bi, bj, ndarray) term — the accumulator of all gemm paths."""
     acc: np.ndarray | None = None
     bi = bj = None
+    if bias is not None and len(bias) > 1:
+        raise ValueError(
+            f"gemm bias has {len(bias)} blocks at one (bi, bj); "
+            "block keys must be unique"
+        )
     if bias is not None and len(bias):
         bi, bj, acc = next(decode_blocks(bias))
     for bi, bj, p in terms:
@@ -191,6 +201,43 @@ def _axpy(a: BlockMatrixFrame, b: BlockMatrixFrame,
         data.alias("data"),
     )
     return BlockMatrixFrame(out, a.n_rows, a.n_cols, a.block_size)
+
+
+def matvec(a: BlockMatrixFrame, x: np.ndarray) -> np.ndarray:
+    """A·x as a driver ndarray of length ``a.n_rows``, for a driver
+    vector ``x`` of length ``a.n_cols`` (flat or a column). One narrow
+    job over ``a.df`` whatever its partitioning; absent blocks are
+    zeros."""
+    x = np.asarray(x, dtype=np.float64)
+    if x.shape not in ((a.n_cols,), (a.n_cols, 1)):
+        raise ValueError(
+            f"shape mismatch: {a.n_rows}x{a.n_cols} @ vector of shape "
+            f"{x.shape}"
+        )
+    bs = a.block_size
+    bx = a.df.sparkSession.sparkContext.broadcast(x.ravel())
+
+    def partial_rows(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
+        xv = bx.value
+        acc: dict[int, np.ndarray] = {}
+        for pdf in batches:
+            for bi, bj, blk in decode_blocks(pdf):
+                y = blk @ xv[bj * bs:bj * bs + blk.shape[1]]
+                acc[bi] = acc[bi] + y if bi in acc else y
+        if acc:
+            yield pd.DataFrame({"bi": list(acc), "y": list(acc.values())})
+
+    try:
+        rows = a.df.mapInPandas(
+            partial_rows, "bi int, y array<double>"
+        ).collect()
+    finally:
+        bx.destroy()
+    out = np.zeros(a.n_rows)
+    for bi, y in rows:
+        out[bi * bs:bi * bs + len(y)] += y
+    return out
 
 
 def add(a: BlockMatrixFrame, b: BlockMatrixFrame) -> BlockMatrixFrame:

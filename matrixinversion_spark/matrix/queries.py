@@ -502,49 +502,16 @@ def la_tsqr_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _power_iterate(m: BlockMatrixFrame, v: BlockMatrixFrame, iters: int,
-                   chunk: int) -> tuple[float, BlockMatrixFrame]:
+def _power_iterate(m: BlockMatrixFrame, v: np.ndarray,
+                   iters: int) -> tuple[float, np.ndarray]:
     """Dominant eigenvalue λ of ``m`` by ``iters`` steps of power
-    iteration from the unit vector ``v``; returns (λ, w) with w = m·v
-    for the final iterate v (checkpointed and persisted).
-
-    The first ``iters − 1`` steps run in CHUNKS of up to ``chunk``
-    lazy multiplies between normalizations: the burn-in needs only the
-    DIRECTION, so the driver pays one blocking norm collect per chunk
-    instead of per step. A chunk must stay in float range — components
-    grow ≤ λ^chunk of a unit vector. After it, one classic step on the
-    renormalized vector yields λ with the iterate error of ``iters``
-    straight steps (direction error ~ratio^(iters−1) for dominant
-    ratio ``ratio``). The chunk-boundary checkpoint cuts the logical
-    plan — without it the nested join/applyInPandas lineage grows
-    exponentially in the optimizer and OOMs the driver around depth
-    ~12. Only scalar norms cross to the driver; the vector never
-    leaves the cluster."""
-
-    def norm_of(w: BlockMatrixFrame) -> float:
-        # ‖w‖₂ via a JVM-side aggregate — one tiny scalar action
-        norm2 = w.df.select(
-            F.sum(
-                F.aggregate(
-                    "data", F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ).alias("s")
-        ).collect()[0]["s"]
-        return float(np.sqrt(norm2))
-
-    done = 0
-    while done < iters - 1:
-        take = min(chunk, iters - 1 - done)
-        w = v
-        for _ in range(take):
-            w = ops.multiply(m, w)
-        w = w.checkpoint()
-        w.persist()
-        v = ops.scale(w, 1.0 / norm_of(w))
-        done += take
-    w = ops.multiply(m, v).checkpoint()
-    w.persist()
-    return norm_of(w), w
+    iteration from the unit driver vector ``v``; returns (λ, w) with
+    w = m·v for the final unit iterate v. Each step is one
+    ``ops.matvec``; the vector and its norm stay on the driver."""
+    w = ops.matvec(m, v)
+    for _ in range(iters - 1):
+        w = ops.matvec(m, w / np.linalg.norm(w))
+    return float(np.linalg.norm(w)), w
 
 
 @query(
@@ -553,36 +520,22 @@ def _power_iterate(m: BlockMatrixFrame, v: BlockMatrixFrame, iters: int,
 )
 def la_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant eigenpair of a seeded symmetric 256² matrix by
-    distributed power iteration: v ← A·v / ‖A·v‖ using the block gemm
-    (the vector stays a distributed 256×1 frame; only the SCALAR norm
-    crosses to the driver each step, so the loop is cluster-scale —
-    the dense-spectral twin of q_pagerank's sparse iteration). The
+    distributed power iteration: v ← A·v / ‖A·v‖, each product one
+    ``ops.matvec`` over the distributed A with v held on the driver
+    (an n-vector is the square root of the matrix's size — the
+    dense-spectral twin of q_pagerank's sparse iteration). The
     symmetrized uniform matrix has a Perron-dominant spectrum (gap
     ≈ √n/n), so 15 iterations converge far past the 1e-9 check:
     rel_residual = ‖A·v − λ·v‖∞ / |λ| rounds to 0.0 at 6 decimals,
-    which the driver hash-checks as a literal.
-
-    r14 optimization round: the 15 steps run through
-    ``_power_iterate`` in CHUNKS of up to 7 lazy multiplies between
-    normalizations (guide §5, fewer blocking collects — the per-step
-    norm was only ever CONSUMED at the final step): components grow
-    ≤ λ^7 = 256^7 ≈ 7e16 per chunk, 290 orders under the float64
-    ceiling, and the dominant ratio ≥ 2 gives direction error
-    ~0.5^14. 15 blocking collects → 3."""
+    which the driver hash-checks as a literal."""
     n, bs, iters = 256, 64, 15
-    with _pinned_exec(spark, (n // bs) ** 2):
-        b = BlockMatrixFrame.random_uniform(
-            spark, n, block_size=bs, seed=11
-        )
-        a = ops.add(b, ops.transpose(b))
-        a.persist()
-        v = BlockMatrixFrame.from_numpy(
-            spark, np.full((n, 1), 1.0 / np.sqrt(n)), block_size=bs
-        )
-        lam, w = _power_iterate(a, v, iters, chunk=7)
-        v = ops.scale(w, 1.0 / lam)
-        av = ops.multiply(a, v)
-        rel_res = ops.max_abs_diff(av, ops.scale(v, lam)) / lam
+    b = BlockMatrixFrame.random_uniform(spark, n, block_size=bs, seed=11)
+    # A is read by every step — pin it once
+    a = ops.add(b, ops.transpose(b)).checkpoint(eager=True)
+    v = np.full(n, 1.0 / np.sqrt(n))
+    lam, w = _power_iterate(a, v, iters)
+    v = w / lam
+    rel_res = float(np.abs(ops.matvec(a, v) - lam * v).max()) / lam
     return spark.createDataFrame(
         [(n, iters, float(round(rel_res, 6)), bool(rel_res < 1e-9))],
         "n int, iters int, rel_residual_r6 double, ok boolean",
@@ -691,7 +644,7 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = max(1000·0.5^i, 1) — κ₂ = 1000 exactly, and both dominant
     ratios are ≥ 2, so the norm-ratio estimator converges ~0.25^i:
     at 14 iterations the measured rel_err on this exact seed is
-    1.43e-08 (numpy twin of the chunked loop, confirmed by the
+    1.43e-08 (numpy twin of the loop, confirmed by the
     distributed run), a 35x margin under the 5e-7 rounding gate —
     r12's 18 was 5.6e-11, i.e. 8 wasted sequential stages (the wall
     IS the stage count). The other r13 stage-count lever: the
@@ -706,19 +659,16 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LUInverse.java) with the diagnostic users run an inversion FOR:
     how close to singular the system is.
 
-    Scale shape: per step one block gemm against an n×1 frame (the
-    vector never leaves the cluster; only the scalar norm crosses to
-    the driver) — identical loop skeleton to la_power_iteration, so
-    the cost at any n is 2·iters vector gemms plus one full inverse.
+    Scale shape: per step one ``ops.matvec`` of the distributed
+    matrix against a driver-held vector (``_power_iterate``, as in
+    la_power_iteration), so the cost at any n is 2·iters narrow
+    matvec jobs plus one full inverse.
     """
     n, bs, iters = 256, 64, 14
     rng = np.random.default_rng(77)
     q_np, _ = np.linalg.qr(rng.standard_normal((n, n)))
     d = np.maximum(1000.0 * 0.5 ** np.arange(n), 1.0)
     a_np = (q_np * d) @ q_np.T
-    # NOT wrapped in _pinned_exec: measured WORSE with AQE off
-    # (10.75 -> 15.47 s min-of-2) — the chained matvec chunks lean on
-    # AQE's post-shuffle coalescing (see la_tsqr_residual's note).
     a = BlockMatrixFrame.from_numpy(spark, a_np, block_size=bs)
     a.persist()
     a_inv = invmod.inverse(a, leaf_size=2 * bs).checkpoint()
@@ -732,22 +682,9 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_inv.df.count()
     a_inv.release()
 
-    # Chunks of 9 (``_power_iterate``): measured honestly at demo n,
-    # chaining alone left the wall unchanged — each multiply is still
-    # its own shuffle STAGE and stage latency, not the driver
-    # round-trip, dominates at n=256; it is kept because fewer
-    # blocking collects is the right shape at any n and costs nothing.
-    # The real wall lever is the iteration COUNT (stage count),
-    # trimmed 30→18→14 with measured 1.43e-08 rel_err (see docstring).
-    # Overflow-safe: components grow <= 1000^9 = 1e27 per chunk — 281
-    # orders under the float64 ceiling.
     def dominant(m: BlockMatrixFrame) -> float:
-        v = BlockMatrixFrame.from_numpy(
-            spark,
-            rng.standard_normal((n, 1)) / np.sqrt(n),
-            block_size=bs,
-        )
-        return _power_iterate(m, v, iters, chunk=9)[0]
+        v = rng.standard_normal(n) / np.sqrt(n)
+        return _power_iterate(m, v, iters)[0]
 
     kappa = dominant(a) * dominant(a_inv)
     rel_err = abs(kappa - 1000.0) / 1000.0

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from matrixinversion_spark.matrix import cg as cgmod
 from matrixinversion_spark.matrix import cholesky as cholmod
 from matrixinversion_spark.matrix import inverse as invmod
 from matrixinversion_spark.matrix import kernels
@@ -360,19 +360,73 @@ _PRODUCERS = {
     ],
     "cholesky": lambda s, a: [cholmod.cholesky(_bm(s, a), leaf_size=32)],
     "tsqr_q": lambda s, a: [qrmod.tsqr(_bm(s, a[:, :16]))[0]],
-    "cg_diag_inv": lambda s, a: [cgmod._diag_inv(_bm(s, a))],
-    "cg_ewise_mul": lambda s, a: [
-        cgmod._ewise_mul(_bm(s, a[:, :1]), _bm(s, a[:, 1:2]))
-    ],
 }
 
 
 @pytest.mark.parametrize("producer", list(_PRODUCERS))
 def test_block_keys_unique(spark, rng, producer):
     """Every producer emits at most one row per (bi, bj) — the
-    precondition cg.dot_self_and's left join relies on."""
+    precondition ops._block_sum's one bias block per key relies on."""
     m = rng.random((96, 96))
     a = m @ m.T + 96 * np.eye(96)  # SPD, for cholesky
     for frame in _PRODUCERS[producer](spark, a):
         keys = [tuple(r) for r in frame.df.select("bi", "bj").collect()]
         assert keys and len(keys) == len(set(keys)), (producer, keys)
+
+
+def test_block_sum_rejects_duplicate_bias_keys():
+    """A gemm bias with two blocks at one (bi, bj) raises instead of
+    silently dropping the second."""
+    eye = np.eye(3)
+    with pytest.raises(ValueError, match="unique"):
+        ops._block_sum(iter([]), bias=encode_blocks([(0, 0, eye),
+                                                     (0, 0, eye)]))
+
+
+def test_matvec_matches_numpy(spark, rng):
+    """ops.matvec == numpy A·x on a ragged grid, on a grid whose
+    whole zero blocks from_numpy drops, and on that frame spread over
+    more partitions, so one block row's partial sums come from
+    several tasks."""
+    a = rng.random((70, 70))
+    x = rng.random(70)
+    got = ops.matvec(BlockMatrixFrame.from_numpy(spark, a, 32), x)
+    assert got.shape == (70,)
+    assert np.abs(got - a @ x).max() < 1e-12
+
+    a = rng.random((96, 96))
+    a[:32, 32:64] = 0.0
+    a[64:, :32] = 0.0
+    x = rng.random((96, 1))
+    m = BlockMatrixFrame.from_numpy(spark, a, 32)
+    assert m.df.count() == 7
+    want = (a @ x)[:, 0]
+    assert np.abs(ops.matvec(m, x) - want).max() < 1e-12
+    spread = BlockMatrixFrame(m.df.repartition(5), 96, 96, 32)
+    split = spread.df.select("bi", F.spark_partition_id().alias("p"))
+    assert split.distinct().count() > split.select("bi").distinct().count()
+    assert np.abs(ops.matvec(spread, x) - want).max() < 1e-12
+
+
+def test_solvers_reject_bad_shapes_before_any_job(spark, rng):
+    """A non-square A, a wrong-length b or x raises ValueError naming
+    both shapes, and no Spark job runs first."""
+    from matrixinversion_spark.matrix.cg import bicgstab_solve, cg_solve
+
+    a = _bm(spark, rng.random((64, 64)) + 64 * np.eye(64))
+    short_b = _bm(spark, rng.random((32, 1)))
+    wide = _bm(spark, rng.random((64, 32)))
+    b = _bm(spark, rng.random((64, 1)))
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-shapes", "solver shape checks")
+    try:
+        for solve in (cg_solve, bicgstab_solve):
+            with pytest.raises(ValueError, match="64x64.*32x1"):
+                solve(a, short_b)
+        with pytest.raises(ValueError, match="64x32.*64x1"):
+            cg_solve(wide, b)
+        with pytest.raises(ValueError, match=r"64x64.*\(63,\)"):
+            ops.matvec(a, np.ones(63))
+        assert sc.statusTracker().getJobIdsForGroup("bad-shapes") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
