@@ -52,6 +52,11 @@ from matrixinversion_spark.matrix.core import (
     encode_blocks,
 )
 
+# Where the reference's sample outputs ``out/A.0``/``out/A.1`` live
+# (FIXTURES.md); ``la_reference_ingest``/``la_reference_datasource``
+# and the sample tests read them from here.
+REFERENCE_OUT = "/root/reference/out"
+
 _HEADER = struct.Struct(">4i")
 
 _PIECE_SCHEMA = (

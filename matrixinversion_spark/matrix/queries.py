@@ -294,11 +294,12 @@ def la_reference_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (matrix/io.py) and per-block deterministic checksums are compared
     against constants extracted from the files independently — proving
     header decode, big-endian row parse, and grid placement."""
-    from matrixinversion_spark.matrix.io import read_reference_matrix
-
-    m = read_reference_matrix(
-        spark, "/root/reference/out", block_size=512
+    from matrixinversion_spark.matrix.io import (
+        REFERENCE_OUT,
+        read_reference_matrix,
     )
+
+    m = read_reference_matrix(spark, REFERENCE_OUT, block_size=512)
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
         out = [
@@ -337,13 +338,14 @@ def la_reference_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     and value checksums against constants extracted independently
     from out/A.0 / out/A.1."""
     from matrixinversion_spark.matrix.io import (
+        REFERENCE_OUT,
         register_reference_datasource,
     )
 
     register_reference_datasource(spark)
     df = (
         spark.read.format("reference_blocks")
-        .option("path", "/root/reference/out/A.*")
+        .option("path", f"{REFERENCE_OUT}/A.*")
         .load()
     )
     row_sum = F.aggregate("values", F.lit(0.0), lambda a, x: a + x)

@@ -7,7 +7,8 @@ when AQE is unavailable (streaming joins). Pattern:
 
     big side:   salt = hash(row) % n_salts         (split the hot key)
     small side: replicated n_salts times           (one copy per salt)
-    join key:   (key, salt)                        (uniform shuffle)
+    join key:   (key, salt)                        (uniform shuffle,
+                                                    >= n_salts partitions)
 
 Result is row-identical to the unsalted join (asserted in tests).
 """
@@ -27,6 +28,14 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
 
     ``small`` is exploded n_salts× (only acceptable when it is the
     small side — the explosion is the price of the uniform shuffle).
+
+    The ``(key, salt)`` shuffle of both sides has at least ``n_salts``
+    partitions whatever ``spark.sql.shuffle.partitions`` says: below
+    ``n_salts`` the salts of the hot key would share buckets (16 salts
+    in 8 partitions land 3, 3, 2, 2, 2, 2, 1, 1), so both sides are
+    repartitioned ``n_salts`` ways on ``(key, salt)`` and the join
+    reuses that partitioning. At or above ``n_salts`` the plan is the
+    plain join's exchange, unchanged.
 
     Only ``inner`` and ``left`` preserve unsalted-join semantics: with
     right/full outer, an unmatched small-side row would surface once
@@ -48,6 +57,12 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
         "__salt",
         F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<int>")),
     )
+    shuffle_parts = int(
+        big.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    if shuffle_parts < n_salts:
+        salted_big = salted_big.repartition(n_salts, key, "__salt")
+        salted_small = salted_small.repartition(n_salts, key, "__salt")
     out = salted_big.join(salted_small, [key, "__salt"], how)
     return out.drop("__salt")
 
@@ -90,8 +105,9 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew handling demonstrated ON DATA: events collapsed onto a hot
     key (≈50% of rows share skew_key=0) joined to a derived dim via
     ``salted_join`` — the hot key shatters across 16 (key, salt)
-    shuffle partitions instead of landing on one executor. Result is
-    row-identical to the plain join (the oracle IS the plain join);
+    shuffle partitions at any core count (``salted_join`` keeps at
+    least ``n_salts`` partitions) instead of landing on one executor.
+    Result is row-identical to the plain join (the oracle IS the plain join);
     ``test_skew_demo_no_straggler`` pins the partition-balance
     property physically."""
     e = _skewed_events(spark, sf_dir)

@@ -4,10 +4,14 @@ scripts/check_correctness.py at sf0.01)."""
 
 from __future__ import annotations
 
+import os
+import warnings
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from matrixinversion_spark.matrix.io import REFERENCE_OUT
 from pyspark.sql import functions as F
 from tests.conftest import SF_DIR, SF_DIR_MID
 
@@ -79,9 +83,25 @@ def test_query_matches_oracle(spark, name):
     assert verdict.startswith("OK"), verdict
 
 
+# queries that read the reference's sample block files instead of
+# SF_DIR; they run wherever that directory exists
+NEEDS_DIR = {
+    "la_reference_ingest": REFERENCE_OUT,
+    "la_reference_datasource": REFERENCE_OUT,
+}
+
+
 def test_all_queries_run_at_smallest_sf(spark):
     failures = {}
+    absent = {
+        name: path for name, path in NEEDS_DIR.items()
+        if not os.path.isdir(path)
+    }
+    if absent:
+        warnings.warn(f"not run, sample directory absent: {absent}")
     for name, fn in entry_mod.queries().items():
+        if name in absent:
+            continue
         try:
             fn(spark, SF_DIR).limit(5).collect()
         except Exception as e:  # noqa: BLE001
