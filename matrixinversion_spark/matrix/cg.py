@@ -44,10 +44,17 @@ def _rhs(a: BlockMatrixFrame, b: BlockMatrixFrame) -> np.ndarray:
     return b.to_numpy()[:, 0]
 
 
-def _solution(a: BlockMatrixFrame, x: np.ndarray) -> BlockMatrixFrame:
+def _column(a: BlockMatrixFrame, x: np.ndarray) -> BlockMatrixFrame:
+    """Driver vector ``x`` as an n×1 frame at ``a``'s block size."""
     return BlockMatrixFrame.from_numpy(
         a.df.sparkSession, x[:, None], block_size=a.block_size
     )
+
+
+def _residual(a: BlockMatrixFrame, x: BlockMatrixFrame,
+              b: np.ndarray) -> float:
+    """‖A·x − b‖∞ on the driver: one ``ops.matvec``."""
+    return float(np.abs(ops.matvec(a, x.to_numpy()[:, 0]) - b).max())
 
 
 def cg_solve(
@@ -90,7 +97,7 @@ def cg_solve(
         p = z + (rz_new / rz) * p
         rz = rz_new
         it += 1
-    return _solution(a, x), it, float(np.sqrt(rr))
+    return _column(a, x), it, float(np.sqrt(rr))
 
 
 def _diagonal(a: BlockMatrixFrame) -> np.ndarray:
@@ -175,7 +182,7 @@ def bicgstab_solve(
         rr = r @ r
         rho = rho_new
         it += 1
-    return _solution(a, x), it, float(np.sqrt(rr))
+    return _column(a, x), it, float(np.sqrt(rr))
 
 
 @query(
@@ -194,12 +201,9 @@ def la_bicgstab_solve(spark: SparkSession, sf_dir: str) -> F.DataFrame:  # type:
         spark, float(n) * np.eye(n), block_size=bs
     )
     a = ops.add(m, eye).checkpoint(eager=True)
-    ones = BlockMatrixFrame.from_numpy(
-        spark, np.ones((n, 1)), block_size=bs
-    )
-    b = ops.multiply(a, ones)
-    x, iters, _ = bicgstab_solve(a, b, tol=1e-10)
-    resid = ops.max_abs_diff(ops.multiply(a, x), b)
+    b = ops.matvec(a, np.ones(n))
+    x, iters, _ = bicgstab_solve(a, _column(a, b), tol=1e-10)
+    resid = _residual(a, x, b)
     return spark.createDataFrame(
         [(n, float(round(resid, 6)), bool(resid < 1e-8 * n))],
         "n int, residual_r6 double, ok boolean",
@@ -226,12 +230,9 @@ def la_cg_solve(spark: SparkSession, sf_dir: str) -> F.DataFrame:  # type: ignor
     )
     # A is reused every iteration — pin it once
     a = ops.add(sym, eye).checkpoint(eager=True)
-    ones = BlockMatrixFrame.from_numpy(
-        spark, np.ones((n, 1)), block_size=bs
-    )
-    b = ops.multiply(a, ones)
-    x, iters, _ = cg_solve(a, b, tol=1e-10)
-    resid = ops.max_abs_diff(ops.multiply(a, x), b)
+    b = ops.matvec(a, np.ones(n))
+    x, iters, _ = cg_solve(a, _column(a, b), tol=1e-10)
+    resid = _residual(a, x, b)
     return spark.createDataFrame(
         [(n, float(round(resid, 6)), bool(resid < 1e-8 * n))],
         "n int, residual_r6 double, ok boolean",

@@ -15,8 +15,8 @@ Same recursive-block scheme as ``lu.lu``, reusing its machinery:
     L22·L22ᵀ = S                      (recursion)
 
 One shuffle per level (the Schur gemm); the triangular solve inverts
-its leaf in an executor task (``ops.leaf_task``) and applies it as a
-join-gemm, exactly like the LU path. The Cholesky leaf itself is a
+its leaf in an executor task (``ops.leaf_task``) and applies it as
+one routed gemm, exactly like the LU path. The Cholesky leaf itself is a
 driver collect, so a non-SPD input raises ``np.linalg.LinAlgError``
 eagerly, at factorization time. Factors are checkpointed
 (``BlockMatrixFrame.checkpoint``) per level for the same

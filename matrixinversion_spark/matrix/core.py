@@ -121,7 +121,7 @@ def auto_block_size(n: int, max_grid: int = 8) -> int:
     """Block size that keeps the block grid at most ``max_grid`` per
     dimension (power-of-two, ≥ DEFAULT_BLOCK_SIZE).
 
-    The join-based gemm shuffles each side once per opposite grid
+    The routed gemm sends each side once per opposite grid
     dimension (see ops.gemm), so shuffle volume grows linearly with
     the grid — a matrix should therefore use the LARGEST block its
     tasks can hold, not a fixed 1024. max_grid=8 bounds gemm shuffle
@@ -165,12 +165,6 @@ class BlockMatrixFrame:
     @property
     def nbj(self) -> int:
         return _nblocks(self.n_cols, self.block_size)
-
-    def block_rows(self, bi: int) -> int:
-        return min(self.block_size, self.n_rows - bi * self.block_size)
-
-    def block_cols(self, bj: int) -> int:
-        return min(self.block_size, self.n_cols - bj * self.block_size)
 
     # -- construction -------------------------------------------------
 

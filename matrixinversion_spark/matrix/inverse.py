@@ -244,7 +244,7 @@ def pinv(a: BlockMatrixFrame,
 
     Same-layer extension of the reference pipeline (Inverse.java:28-40
     inverts square matrices only): the Gram multiply is the engine's
-    one-shuffle join-SUMMA gemm, the solve reuses the LU machinery,
+    one-exchange routed gemm, the solve reuses the LU machinery,
     and the m×m Gram is the only square work — so the cost scales
     with n only through the two rectangular multiplies. For
     rank-deficient or ill-conditioned A use the SVD route

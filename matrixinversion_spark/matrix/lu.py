@@ -14,10 +14,11 @@ solve the off-diagonal factors, form the Schur complement, recurse.
 Spark-first re-expression (SURVEY.md §7): the recursion is driver-side
 Python over *logical* BlockMatrixFrame slices (block-coordinate
 filters — no partition directory trees, no control files); each level
-lowers to a handful of Spark jobs (one join-shuffle matmul + JVM
-subtract). Triangular solves are recursive too — halving splits down
-to a leaf whose factor is inverted by ``ops.leaf_task`` in one
-executor task and applied as one join-gemm (the reference's mappers
+lowers to a handful of Spark jobs (the Schur complement is one
+routed-exchange gemm with the subtract fused in as its bias).
+Triangular solves are recursive too — halving splits down to a leaf
+whose factor is inverted by ``ops.leaf_task`` in one executor task
+and applied as one routed gemm (the reference's mappers
 likewise apply the ≤limit-sized diagonal factor,
 `LUDecomposition.java:470-487`).
 Leaf factorizations run through ``ops.leaf_task`` the same way.

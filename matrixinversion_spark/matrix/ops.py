@@ -9,12 +9,13 @@ application at read time (P12, `Read_LU.java:66-92,129-132`).
 
 Physical shapes, 100 TB honest:
 
-- ``multiply`` — relational SUMMA: equi-join A(bi,k)⋈B(k,bj) on the
-  inner block index (one shuffle, uniform key), then groupBy (bi,bj)
-  with an Arrow-batched GEMM-accumulate (numpy dgemm per block pair —
-  the dense kernel *is* the payload, so this is the one place Python
-  touches data, at ~8 MB Arrow batches). The reference hand-routes
-  the same dataflow through HDFS files + a task-number partitioner.
+- ``multiply``/``gemm`` — one routed exchange of ``nbj·|A| +
+  nbi·|B| + |C|`` bytes on the uniform (bi,bj) key, then one grouped
+  numpy kernel that pairs blocks by k (dgemm per block pair — the
+  dense kernel *is* the payload, at ~8 MB Arrow batches);
+  ``k_chunk`` adds a kc group key and one (bi,bj) merge. The
+  reference hand-routes the same dataflow through HDFS files + a
+  task-number partitioner.
 - ``add``/``subtract`` — full-outer join on (bi,bj) + JVM ``zip_with``;
   absent blocks are zeros. No Python.
 - ``transpose`` — per-block numpy transpose + (bi,bj) swap; block
@@ -42,16 +43,21 @@ from collections.abc import Callable, Iterator, Sequence
 import numpy as np
 import pandas as pd
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matrixinversion_spark.matrix.core import (
-    BLOCK_COLUMNS, BLOCK_SCHEMA, BlockMatrixFrame, assemble, block_array,
-    decode_blocks, encode_blocks, tile,
+    BLOCK_COLUMNS, BLOCK_SCHEMA, BlockMatrixFrame, assemble, decode_blocks,
+    encode_blocks, tile,
 )
 
 
+# the ``side`` tag of a routed gemm row: A panel, B panel, or bias
+_A, _B, _C = 0, 1, 2
+
+
 def multiply(a: BlockMatrixFrame, b: BlockMatrixFrame) -> BlockMatrixFrame:
-    """C = A·B via join-on-inner-index + GEMM-accumulate per block."""
+    """C = A·B: ``gemm`` without a bias, one routed exchange."""
     return gemm(a, b)
 
 
@@ -61,34 +67,32 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
          k_chunk: int | None = None) -> BlockMatrixFrame:
     """Fused C + α·(A·B) (C optional, absent blocks = zeros).
 
-    One shuffle total: the product pairs and the bias blocks of C are
-    cogrouped on (bi, bj) and combined inside a single numpy kernel —
-    the Schur complement S = A4 − L2·U2 (reference O11) is
-    ``gemm(l2, u2, c=a4, alpha=-1)`` with no separate subtract pass
-    (which would cost a second join plus a boxing-heavy array
-    ``zip_with`` over megabyte blocks).
+    One routed exchange, as the reference routes its Schur reducer
+    (O11, `LUDecomposition.java:495-659`): each A(i,k) goes to every
+    output (i,j), each B(k,j) to every (i,j), each C(i,j) as is.
+    Grouped on (bi, bj), one numpy kernel pairs A and B blocks by k
+    (in k order) and adds α·A·B into the bias; a group with no
+    k-pair and no bias emits nothing. S = A4 − L2·U2 is
+    ``gemm(l2, u2, c=a4, alpha=-1)``, with no separate subtract.
 
-    Shuffle volume: the inner-index join replicates every A block
-    ``nbj(B)`` times and every B block ``nbi(A)`` times, so one gemm
-    shuffles ``(nbj_B + nbi_A) × matrix_bytes`` — linear in the GRID
-    dimension, not the matrix. Pick the block size so the grid stays
-    O(√cores) (``core.auto_block_size``); a 16384² float64 matrix at
-    bs=1024 is a 16×16 grid and 64 GB of shuffle per multiply, at
-    bs=2048 half that (measured — the bs=1024 point exhausted an
-    80 GB spill disk; see BENCH_NOTES "N=16384").
+    Shuffle volume: ``nbj(B)·|A| + nbi(A)·|B| + |C|`` bytes, linear in
+    the GRID dimension, not the matrix. Pick the block size so the
+    grid stays O(√cores) (``core.auto_block_size``); a 16384² float64
+    matrix at bs=1024 is a 16×16 grid and 64 GB of shuffle per
+    multiply, at bs=2048 half that (measured — the bs=1024 point
+    exhausted an 80 GB spill disk; see BENCH_NOTES "N=16384").
 
-    Per-task memory: each output task materializes its whole k-panel,
+    Per-task memory: each output task holds its whole k-panel,
     ``(2k+1)·bs²·8`` bytes (544 MB at k=8, bs=2048) — the bound that
     OOM'd the 64 GB local[32] heap at N=16384 (BENCH_NOTES r5
     failure catalog; the Spark analogue of the reference's ~800 MB
-    strip budget, `LUInverse.java:73-75`). ``k_chunk`` caps it:
-    partial products are computed per k-range of that length (first
-    shuffle unchanged, tasks hold ``(2·k_chunk+1)`` blocks) and then
-    merge-summed in a second, output-sized shuffle. Cost: one extra
-    shuffle of ``ceil(k/k_chunk) × output_bytes``; use when
-    ``(2k+1)·bs²·8`` approaches per-core executor memory — the
-    inverse() pipeline leaves it off because auto_block_size caps
-    k ≤ 8.
+    strip budget, `LUInverse.java:73-75`). ``k_chunk`` caps it: the
+    exchange also groups on ``kc = floor(k / k_chunk)``, so a task
+    holds ``2·k_chunk`` panel blocks, and a second, (bi, bj) exchange
+    sums the partial blocks (``ceil(k/k_chunk) + 1`` per output with
+    a bias). Use it when ``(2k+1)·bs²·8`` approaches per-core
+    executor memory — the inverse() pipeline leaves it off because
+    auto_block_size caps k ≤ 8.
     """
     if a.n_cols != b.n_rows or a.block_size != b.block_size:
         raise ValueError(
@@ -97,69 +101,55 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
         )
     if c is not None and (c.n_rows, c.n_cols) != (a.n_rows, b.n_cols):
         raise ValueError("bias shape mismatch in gemm")
-    left = a.df.select(
-        F.col("bi"), F.col("bj").alias("k"),
-        F.col("rows").alias("a_rows"), F.col("cols").alias("a_cols"),
-        F.col("data").alias("a_data"),
-    )
-    right = b.df.select(
-        F.col("bi").alias("k"), F.col("bj"),
-        F.col("cols").alias("b_cols"), F.col("data").alias("b_data"),
-    )
-    joined = left.join(right, "k")
+    if k_chunk is not None and k_chunk < 1:
+        raise ValueError("k_chunk must be >= 1")
 
-    def products(pdf: pd.DataFrame) -> Iterator[tuple]:
-        for bi, bj, ar, ac, bc, ad, bd in zip(
-            pdf["bi"], pdf["bj"], pdf["a_rows"], pdf["a_cols"],
-            pdf["b_cols"], pdf["a_data"], pdf["b_data"],
-        ):
-            blk_a, blk_b = block_array(ad, ar, ac), block_array(bd, ac, bc)
-            yield int(bi), int(bj), alpha * (blk_a @ blk_b)
+    def route(m: BlockMatrixFrame, side: int, bi: str, bj: str,
+              k: str) -> DataFrame:
+        # SQL strings: one py4j call per column where Column objects
+        # take several — driver plan-building time for every gemm
+        return m.df.selectExpr(f"{bi} AS bi", f"{bj} AS bj", f"{k} AS k",
+                               f"{side} AS side", "rows", "cols", "data")
 
+    def fan(n: int) -> str:
+        return f"explode(sequence(0, {n - 1}))"
+
+    routed = route(a, _A, "bi", fan(b.nbj), "bj").union(
+        route(b, _B, fan(a.nbi), "bj", "bi"))
+    if c is not None:
+        routed = routed.union(route(c, _C, "bi", "bj", "CAST(NULL AS INT)"))
+    keys = ["bi", "bj"]
     if k_chunk is not None:
-        if k_chunk < 1:
-            raise ValueError("k_chunk must be >= 1")
-        # stage 1: bounded-panel partial products per k-range
-        partials = (
-            joined.withColumn(
-                "kc", (F.col("k") / F.lit(int(k_chunk))).cast("int")
-            )
-            .groupBy("bi", "bj", "kc")
-            .applyInPandas(lambda pdf: _block_sum(products(pdf)),
-                           BLOCK_SCHEMA)
+        # the bias (k null) is its own kc group, summed in the merge
+        routed = routed.withColumn("kc", F.floor(F.col("k") / k_chunk))
+        keys.append("kc")
+
+    def pair_sum(pdf: pd.DataFrame) -> pd.DataFrame:
+        side = pdf["side"]
+        a_k, b_k = (
+            {int(k): blk for k, (_, _, blk)
+             in zip(pdf["k"][side == s], decode_blocks(pdf[side == s]))}
+            for s in (_A, _B)
         )
-        # stage 2: the partials are already products — sum them
-        bias_df = c.df if c is not None else a.df.sparkSession.createDataFrame(
-            [], BLOCK_SCHEMA
-        )
-        out = (
-            partials.groupBy("bi", "bj")
-            .cogroup(bias_df.groupBy("bi", "bj"))
-            .applyInPandas(
-                lambda pdf, bias: _block_sum(decode_blocks(pdf), bias),
-                BLOCK_SCHEMA,
-            )
-        )
-    elif c is None:
-        out = joined.groupBy("bi", "bj").applyInPandas(
-            lambda pdf: _block_sum(products(pdf)), BLOCK_SCHEMA
-        )
-    else:
-        out = (
-            joined.groupBy("bi", "bj")
-            .cogroup(c.df.groupBy("bi", "bj"))
-            .applyInPandas(
-                lambda pdf, bias: _block_sum(products(pdf), bias),
-                BLOCK_SCHEMA,
-            )
-        )
+        bias = pdf[side == _C]
+        ks = sorted(a_k.keys() & b_k.keys())
+        if not ks and bias.empty:
+            return encode_blocks([])
+        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
+        return _block_sum(
+            ((bi, bj, alpha * (a_k[k] @ b_k[k])) for k in ks), bias)
+
+    out = routed.groupBy(*keys).applyInPandas(pair_sum, BLOCK_SCHEMA)
+    if k_chunk is not None:
+        out = out.groupBy("bi", "bj").applyInPandas(
+            lambda pdf: _block_sum(decode_blocks(pdf)), BLOCK_SCHEMA)
     return BlockMatrixFrame(out, a.n_rows, b.n_cols, a.block_size)
 
 
 def _block_sum(terms: Iterator[tuple],
                bias: pd.DataFrame | None = None) -> pd.DataFrame:
     """One output block: the optional bias block plus every
-    (bi, bj, ndarray) term — the accumulator of all gemm paths."""
+    (bi, bj, ndarray) term — the accumulator of both gemm stages."""
     acc: np.ndarray | None = None
     bi = bj = None
     if bias is not None and len(bias) > 1:

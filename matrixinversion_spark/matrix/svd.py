@@ -14,7 +14,7 @@ problem on the driver.
     U = Q·Ub           (narrow distributed map)
 
 Scale, 100 TB honest: A never leaves the cluster and is read twice
-per pass (the gemm joins stream its blocks); everything that moves to
+per pass (the routed gemm streams its blocks); everything that moves to
 the driver is O(k·m) — rank-sized, not data-sized. Ω and the k×m
 projected matrix bound the driver at ~k·m·8 bytes, so the method
 targets the tall regime (n huge, m up to ~1e6 at k≈100). A fully

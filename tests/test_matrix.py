@@ -4,6 +4,8 @@ recursion-boundary cases (FIXTURES.md §1)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -317,6 +319,77 @@ def test_gemm_k_chunked_matches_plain(spark, rng):
     got = ops.gemm(am, bm, k_chunk=2).to_numpy()
     assert np.abs(got - a @ b).max() < 1e-11
 
+
+
+def _optimized_plan(frame: BlockMatrixFrame) -> list[str]:
+    """The optimized logical plan of ``frame``, one node per line,
+    tree glyphs stripped (the root first)."""
+    plan = frame.df._jdf.queryExecution().optimizedPlan().toString()
+    return [line.lstrip(" :+-") for line in plan.splitlines()]
+
+
+def _pandas_group_keys(plan: list[str]) -> list[list[str]]:
+    """The grouping columns of each FlatMapGroupsInPandas node, root
+    first, expression ids dropped."""
+    return [
+        [re.sub(r"#\d+L?$", "", key) for key in m.group(1).split(", ")]
+        for m in (re.match(r"FlatMapGroupsInPandas \[([^\]]*)\]", line)
+                  for line in plan)
+        if m
+    ]
+
+
+def test_gemm_is_one_routed_exchange(spark, rng):
+    """gemm with a bias plans as one grouped pandas kernel on
+    (bi, bj) over routed blocks: no join, no cogroup."""
+    a, b, c = (_bm(spark, rng.random(shape))
+               for shape in ((96, 64), (64, 96), (96, 96)))
+    plan = _optimized_plan(ops.gemm(a, b, c=c, alpha=-1.0))
+    assert not [n for n in plan if "Join" in n or "CoGroup" in n], plan
+    assert _pandas_group_keys(plan) == [["bi", "bj"]], plan
+
+
+def test_gemm_k_chunk_groups_by_chunk_then_merges(spark, rng):
+    """gemm(k_chunk=...) groups the routed blocks by (bi, bj, kc) and
+    merges the partial blocks by (bi, bj) above that."""
+    a, b, c = (_bm(spark, rng.random(shape))
+               for shape in ((96, 96), (96, 64), (96, 64)))
+    for bias in (None, c):
+        plan = _optimized_plan(ops.gemm(a, b, c=bias, k_chunk=1))
+        assert not [n for n in plan if "Join" in n or "CoGroup" in n], plan
+        assert _pandas_group_keys(plan) == [["bi", "bj"],
+                                            ["bi", "bj", "kc"]], plan
+
+
+@pytest.mark.parametrize("k_chunk", [None, 1])
+def test_gemm_emits_only_paired_or_biased_blocks(spark, rng, k_chunk):
+    """On block-triangular operands (3x3 grid, zero blocks absent),
+    gemm's block keys are exactly the (bi, bj) with a k such that
+    A(bi, k) and B(k, bj) are both present, plus C's keys."""
+    def blocks(mask: str, drop=()) -> np.ndarray:
+        m = assemble(tile(rng.random((96, 96)), 32, mask), 96, 96, 32)
+        for bi, bj in drop:
+            m[bi * 32:(bi + 1) * 32, bj * 32:(bj + 1) * 32] = 0.0
+        return m
+
+    def keys(frame: BlockMatrixFrame) -> set:
+        rows = [tuple(r) for r in frame.df.select("bi", "bj").collect()]
+        assert len(rows) == len(set(rows)), rows
+        return set(rows)
+
+    a, b = blocks("upper", drop=[(1, 2)]), blocks("upper", drop=[(1, 2)])
+    c = blocks("full", drop=[(i, j) for i in range(3) for j in range(3)
+                             if (i, j) != (2, 0)])
+    am, bm, cm = _bm(spark, a), _bm(spark, b), _bm(spark, c)
+    paired = {(i, j) for i, k in keys(am) for k2, j in keys(bm) if k == k2}
+    # row 1 of A and column 2 of B meet at no k: (1, 2) stays absent
+    assert paired == {(0, 0), (0, 1), (0, 2), (1, 1), (2, 2)}
+    got = ops.gemm(am, bm, k_chunk=k_chunk)
+    assert keys(got) == paired
+    assert np.abs(got.to_numpy() - a @ b).max() < 1e-12
+    got = ops.gemm(am, bm, c=cm, alpha=-1.0, k_chunk=k_chunk)
+    assert keys(got) == paired | {(2, 0)}
+    assert np.abs(got.to_numpy() - (c - a @ b)).max() < 1e-12
 
 
 def _bm(spark, m: np.ndarray) -> BlockMatrixFrame:

@@ -48,10 +48,11 @@ class TestFusedInversePlanPin:
     def test_job_fingerprint_and_residual_2048(self, spark):
         # Exact bench geometry (bench.py INVERSE_*): N=2048, 1024
         # blocks, leaf 1024, AQE off, shuffle partitions = 2·grid.
-        # The whole inverse must execute as FIVE Spark jobs (the noop
-        # write plus the lazy localCheckpoint/persist materializations
-        # the single sweep schedules) — the r8 two-sweep pipeline took
-        # 10, so a regression roughly doubles this count.
+        # The whole inverse must execute as ONE Spark job, the noop
+        # write: every gemm is a routed exchange, a stage of that job.
+        # A gemm built on a join ran 5 (with AQE off each small join
+        # side became a broadcast, collected in a job of its own), the
+        # r8 two-sweep pipeline 10.
         from matrixinversion_spark.matrix import inverse as invmod
         from matrixinversion_spark.matrix import ops
         from matrixinversion_spark.matrix.core import BlockMatrixFrame
@@ -78,9 +79,9 @@ class TestFusedInversePlanPin:
             ainv = invmod.inverse(a, leaf_size=leaf)
             ainv.df.write.format("noop").mode("overwrite").save()
             jobs = max_job() - j0
-            assert jobs == 5, (
+            assert jobs == 1, (
                 f"fused inverse at N={n} ran {jobs} Spark jobs "
-                "(pinned: 5) — plan shape regressed"
+                "(pinned: 1) — plan shape regressed"
             )
             # 3e-11-class residual at N=2048 (BENCH_NOTES r9); the
             # gate is 1e-8·N with margin for rougher conditioning.
