@@ -37,6 +37,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matrixinversion_spark.registry import query
+from matrixinversion_spark.relational.queries import (
+    REVENUE_SQL,
+    disc_price,
+    sum_cents,
+)
 from matrixinversion_spark.session import read_table
 
 # persist()ed words frames for filters too large to ship as a local
@@ -194,11 +199,10 @@ def bloom_semi_filter(
 
 @query(
     "q_bloom_prefilter_join",
-    oracle="""
+    oracle=f"""
     SELECT CAST(year(o_orderdate) AS INT) AS yr,
            CAST(count(*) AS BIGINT) AS n_items,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)
-               AS revenue
+           {REVENUE_SQL} AS revenue
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     WHERE o_orderpriority = '1-URGENT'
     GROUP BY 1
@@ -231,11 +235,6 @@ def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").cast("int").alias("yr"))
         .agg(
             F.count("*").cast("bigint").alias("n_items"),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                ),
-                2,
-            ).alias("revenue"),
+            sum_cents(disc_price(), 4).alias("revenue"),
         )
     )

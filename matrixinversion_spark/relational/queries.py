@@ -23,7 +23,7 @@ handles skew. Nothing collects to the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -35,6 +35,39 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
+def hundredths(col: str) -> Column:
+    """A two-decimal money or rate column (TPC-H declares them
+    DECIMAL(15,2)) as an exact integer count of hundredths."""
+    return F.rint(F.col(col) * 100).cast("long")
+
+
+def disc_price() -> Column:
+    """``l_extendedprice * (1 - l_discount)`` exactly, in 1e-4 units."""
+    return hundredths("l_extendedprice") * (100 - hundredths("l_discount"))
+
+
+# The oracles' twin of ``sum_cents(disc_price(), 4)``.
+REVENUE_SQL = """CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE)"""
+
+
+def sum_cents(units: Column, scale: int) -> Column:
+    """The exact sum of integer ``units`` of ``10**-scale``, rounded
+    half up to cents, as a double.
+
+    A double sum of money can land a half-cent tie on either side of
+    its rounding (q5 at seed 11 sums to 1085279.4150 exactly; Spark
+    gave .42, DuckDB's double sum .41), so the oracles sum DECIMAL(15,2)
+    casts and this sums the same values as integers, which agree with
+    them bit for bit. Integers rather than Spark decimals: a decimal
+    sum this wide runs on BigDecimal, which took q1's aggregation from
+    0.16 to 0.31 s at sf0.01 on 4 cores. A sum past 2**63 units raises
+    (ANSI overflow check) rather than wraps."""
+    return F.round(
+        F.sum(units).cast("decimal(38,0)") / 10**scale, 2
+    ).cast("double")
+
+
 # ---------------------------------------------------------------------------
 # Aggregation family
 # ---------------------------------------------------------------------------
@@ -44,14 +77,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     oracle="""
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2)                                    AS sum_qty,
-           round(sum(l_extendedprice), 2)                               AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)            AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+           CAST(round(sum(price), 2) AS DOUBLE)                        AS sum_base_price,
+           CAST(round(sum(price * (1 - disc)), 2) AS DOUBLE)           AS sum_disc_price,
+           CAST(round(sum(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE) AS sum_charge,
            round(avg(l_quantity), 4)                                    AS avg_qty,
            round(avg(l_extendedprice), 4)                               AS avg_price,
            round(avg(l_discount), 4)                                    AS avg_disc,
            count(*)                                                     AS count_order
-    FROM lineitem
+    FROM (SELECT *, CAST(l_extendedprice AS DECIMAL(15,2)) AS price,
+                    CAST(l_discount AS DECIMAL(15,2))      AS disc,
+                    CAST(l_tax AS DECIMAL(15,2))           AS tax
+          FROM lineitem)
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
@@ -64,15 +100,16 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial + 4-group final — the cheapest possible shuffle.
     """
     li = _t(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    price, disc = hundredths("l_extendedprice"), disc_price()
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            sum_cents(price, 2).alias("sum_base_price"),
+            sum_cents(disc, 4).alias("sum_disc_price"),
+            sum_cents(disc * (100 + hundredths("l_tax")), 6)
+            .alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
@@ -213,9 +250,9 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q3_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           {REVENUE_SQL} AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate
     FROM customer, orders, lineitem
     WHERE c_mktsegment = 'BUILDING'
@@ -246,9 +283,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            sum_cents(disc_price(), 4).alias("revenue")
         )
         .select(
             "l_orderkey",
@@ -262,9 +297,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q5_region_revenue",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           {REVENUE_SQL} AS revenue
     FROM customer, orders, lineitem, supplier, nation, region
     WHERE c_custkey = o_custkey
       AND l_orderkey = o_orderkey
@@ -298,9 +333,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            sum_cents(disc_price(), 4).alias("revenue")
         )
         .orderBy(F.desc("revenue"))
     )

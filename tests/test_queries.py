@@ -83,6 +83,47 @@ def test_query_matches_oracle(spark, name):
     assert verdict.startswith("OK"), verdict
 
 
+@pytest.fixture(scope="module")
+def seeded_tables(tmp_path_factory):
+    """sf0.01 tables from the benchmark's seeded generator, one
+    directory per seed, written on first use."""
+    from perfbench import datagen
+
+    dirs = {}
+
+    def tables(seed: int) -> str:
+        if seed not in dirs:
+            dirs[seed] = str(tmp_path_factory.mktemp(f"seed{seed}"))
+            datagen.write(dirs[seed], 0.01, seed)
+        return dirs[seed]
+
+    return tables
+
+
+@pytest.mark.parametrize("name,seed", [
+    ("q3_shipping_priority", 107),
+    ("q5_region_revenue", 11),
+    ("q5_region_revenue", 31),
+])
+def test_money_sums_match_oracle_bitwise(spark, seeded_tables, monkeypatch,
+                                         name, seed):
+    """Revenue sums whose exact value is a half-cent tie: a double sum
+    rounds them either way, on either engine; exact sums do not."""
+    import scripts.check_correctness as cc
+
+    monkeypatch.setattr(cc, "STRICT", True)
+    sf_dir = seeded_tables(seed)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    got = entry_mod.queries()[name](spark, sf_dir).toPandas()
+    want = con.execute(entry_mod.oracle_sql()[name]).df()
+    verdict = cc.compare(name, got, want)
+    assert verdict.startswith("OK"), verdict
+
+
 # queries that read the reference's sample block files instead of
 # SF_DIR; they run wherever that directory exists
 NEEDS_DIR = {

@@ -1,4 +1,5 @@
-"""Session factory: the ``SPARK_GRAFT_CPUS`` core-count override."""
+"""Session factory: the ``SPARK_GRAFT_CPUS`` core-count override, and
+the schema-pinned table reader."""
 
 from __future__ import annotations
 
@@ -19,3 +20,39 @@ def test_malformed_graft_cpus_raises(spark, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert session._graft_cpus() is None
     assert session._shuffle_partitions(None) == "32"
+
+
+def _max_job_id(spark) -> int:
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids) if ids else -1
+
+
+def _write_table(path: str, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), path)
+
+
+def test_second_read_table_runs_no_job(spark, tmp_path):
+    _write_table(str(tmp_path / "t.parquet"), {"a": [1, 2, 3]})
+    first = session.read_table(spark, str(tmp_path), "t")
+    j0 = _max_job_id(spark)
+    again = session.read_table(spark, str(tmp_path), "t")
+    assert _max_job_id(spark) == j0
+    assert again.schema == first.schema
+    assert sorted(r.a for r in again.collect()) == [1, 2, 3]
+
+
+def test_rewritten_table_is_resolved_afresh(spark, tmp_path):
+    """A table rewritten at the same path with another column reads
+    with its new schema, and the map keeps one entry for the path."""
+    path = tmp_path / "t.parquet"
+    _write_table(str(path), {"a": [1, 2, 3]})
+    assert session.read_table(spark, str(tmp_path), "t").columns == ["a"]
+    _write_table(str(path), {"a": [4, 5], "b": ["x", "y"]})
+    rewritten = session.read_table(spark, str(tmp_path), "t")
+    assert rewritten.columns == ["a", "b"]
+    assert sorted(rewritten.collect()) == [(4, "x"), (5, "y")]
+    assert [k for k in session._SCHEMAS if k.startswith(str(tmp_path))] \
+        == [str(path)]
