@@ -32,6 +32,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# perfbench/run.py reads the host fingerprint as bench._machine_index
+from matrixinversion_spark.profile import (  # noqa: E402
+    machine_index as _machine_index,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 HEADLINE = [
@@ -79,57 +84,12 @@ INVERSE_BLOCK = 1024
 INVERSE_LEAF = 1024
 
 
-def _machine_index() -> dict:
-    """Co-tenant/machine fingerprint emitted WITH the timings
-    (BENCH_NOTES round-6 machine-index protocol, VERDICT r10 #7):
-    wall-clock on this shared host swings ±25% with co-tenant load
-    and the storage stack, so each report carries the numbers that
-    adjudicate "plan moved" vs "machine moved" mechanically —
-    dgemm GFLOP/s (CPU), a direct-I/O write probe (storage), and
-    the 1-min loadavg (co-tenancy)."""
-    import shutil
-    import subprocess
-    import tempfile
-
-    idx: dict = {"loadavg_1m": round(os.getloadavg()[0], 2)}
-    try:
-        import numpy as np
-
-        n = 2048
-        rng = np.random.default_rng(0)
-        x = rng.standard_normal((n, n))
-        t0 = time.time()
-        x @ x
-        idx["dgemm_2048_gflops"] = round(
-            2 * n**3 / (time.time() - t0) / 1e9, 1
-        )
-    except Exception:
-        idx["dgemm_2048_gflops"] = None
-    idx["direct_write_mbps"] = None
-    d = None
-    try:
-        # mkdtemp inside the guard: a full/read-only TMPDIR must
-        # degrade this optional probe to None, not kill the bench
-        d = tempfile.mkdtemp(prefix="bench_io_")
-        t0 = time.time()
-        subprocess.run(
-            ["dd", "if=/dev/zero", f"of={d}/probe", "oflag=direct",
-             "bs=1M", "count=256"],
-            check=True, capture_output=True,
-        )
-        idx["direct_write_mbps"] = round(256 / (time.time() - t0), 0)
-    except Exception:  # O_DIRECT unsupported (tmpfs), dd missing, …
-        pass
-    finally:
-        if d is not None:
-            shutil.rmtree(d, ignore_errors=True)
-    return idx
-
-
 def main() -> None:
     import __spark_entry__ as entry_mod
     from matrixinversion_spark.matrix import inverse as invmod
     from matrixinversion_spark.matrix.core import BlockMatrixFrame
+    from matrixinversion_spark.matrix.queries import _pinned_exec
+    from matrixinversion_spark.profile import profiled
     from matrixinversion_spark.session import get_spark, load_tables
 
     machine = _machine_index()  # before Spark holds the cores
@@ -159,12 +119,7 @@ def main() -> None:
     # its plan (AQE materializes one job per exchange stage on fixed
     # data) — a fingerprint delta between rounds means the PLAN moved,
     # a wall-clock delta with equal fingerprints means the MACHINE did.
-    tracker = spark.sparkContext.statusTracker()
     aux: dict[str, int | None] = {}
-
-    def _max_job_id() -> int:
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
 
     # two-sample protocol (VERDICT r11 #3): the whole headline sweep
     # runs SAMPLES times back-to-back, each sample prefixed with its
@@ -198,19 +153,17 @@ def main() -> None:
         s_machine = _machine_index() if s else machine
         s_timings: dict[str, float] = {}
         for name in HEADLINE:
-            j0 = _max_job_id()
-            t0 = time.time()
-            qs[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            s_timings[name] = round(time.time() - t0, 3)
-            n_jobs = _max_job_id() - j0
+            with profiled(spark, name) as p:
+                qs[name](spark, SF_DIR).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            s_timings[name] = round(p.wall_s, 3)
             if s == 0:
-                aux[f"{name}_jobs"] = n_jobs
-            elif aux[f"{name}_jobs"] != n_jobs:
+                aux[f"{name}_jobs"] = p.jobs
+            elif aux[f"{name}_jobs"] != p.jobs:
                 # nondeterministic planning is a finding, not noise —
                 # surface it in the artifact rather than dying
-                aux[f"{name}_jobs_sample{s + 1}"] = n_jobs
+                aux[f"{name}_jobs_sample{s + 1}"] = p.jobs
         samples.append(
             {
                 "total_sec": round(sum(s_timings.values()), 3),
@@ -224,13 +177,11 @@ def main() -> None:
     # the reference's actual workload: dense matrix inversion at its
     # demonstrated scale (N=2048; `Matrix/run.csh` pipeline O19).
     # Generation is timed separately (the reference's MakeData is its
-    # own program, run before the LU job). The inverse runs with AQE
-    # off and shuffle partitions matched to the block grid: AQE's
-    # per-stage re-planning adds a driver round-trip per exchange,
-    # which dominates when a stage holds only a handful of 8 MB
-    # blocks; on a real cluster these two confs are the job-level
-    # submit conf for the matrix pipeline. Median of 3 runs — the
-    # single-run variance band on this harness is ±50% (BENCH_NOTES).
+    # own program, run before the LU job). The inverse runs under the
+    # matrix queries' execution scope (AQE off, shuffle partitions
+    # matched to the block grid; see ``_pinned_exec``). Median of 3
+    # runs — the single-run variance band on this harness is ±50%
+    # (BENCH_NOTES).
     t0 = time.time()
     a = BlockMatrixFrame.random_uniform(
         spark, INVERSE_N, block_size=INVERSE_BLOCK, seed=45
@@ -238,23 +189,16 @@ def main() -> None:
     a.df.count()
     timings["la_generate_2048"] = round(time.time() - t0, 3)
 
-    n_grid = (INVERSE_N // INVERSE_BLOCK) ** 2
-    _outer_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(n_grid * 2, 8)))
-    inverse_jobs = None
-    try:
+    with _pinned_exec(spark, (INVERSE_N // INVERSE_BLOCK) ** 2):
         runs = []
         results = []
         for _ in range(3):
-            ids0 = tracker.getJobIdsForGroup(None) or [0]
-            t0 = time.time()
-            ainv = invmod.inverse(a, leaf_size=INVERSE_LEAF)
-            ainv.df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
+            with profiled(spark, f"la_inverse_{INVERSE_N}") as p:
+                ainv = invmod.inverse(a, leaf_size=INVERSE_LEAF)
+                ainv.df.write.format("noop").mode("overwrite").save()
+            runs.append(p.wall_s)
             results.append(ainv)
-            ids1 = tracker.getJobIdsForGroup(None) or [0]
-            inverse_jobs = max(ids1) - max(ids0)
+        inverse_jobs = p.jobs
         # Release AFTER all three runs, not between them: the three
         # plans are identical (same seed, same cached A), so Spark's
         # CacheManager substitutes run 1's persisted subtrees into
@@ -269,11 +213,6 @@ def main() -> None:
         for r in results:
             r.release()
         timings[f"la_inverse_{INVERSE_N}"] = round(sorted(runs)[1], 3)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        # restore the session's own (core-count-derived) value, not a
-        # hard-coded 32 (r13: the default scales with SPARK_GRAFT_CPUS)
-        spark.conf.set("spark.sql.shuffle.partitions", _outer_parts)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:

@@ -38,6 +38,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -175,43 +176,15 @@ class BlockMatrixFrame:
         """Driver-side ingest (tests/leaves); zero blocks dropped."""
         a = np.asarray(a, dtype=np.float64)
         n, m = a.shape
-        # Arrow path: ndarray payloads serialize without boxing into
-        # Python floats (a leaf factor is ~8 MB — list-of-float
-        # createDataFrame was the driver bottleneck). Arrow is a
-        # runtime-settable SQL conf and defaults to FALSE on a bare
-        # SparkSession; the non-Arrow fallback type-verifies each cell
-        # and rejects numpy.float64, so enable it here rather than
-        # assume the caller used our session factory.
+        # A pyarrow.Table always goes through Arrow, whatever the
+        # session's Arrow conf: the ndarray payloads ship unboxed (a
+        # leaf factor is ~8 MB; boxing each cell into a Python float
+        # was the driver bottleneck).
         pdf = encode_blocks(tile(a, block_size, keep_zeros=keep_zeros))
-        # set-and-restore (r4 ADVICE): Arrow conversion happens eagerly
-        # inside createDataFrame, so the conf only needs to hold for
-        # this call — leaving it flipped would silently change the
-        # caller's later createDataFrame semantics on a bare session.
-        _ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
-        try:
-            prior: str | None = spark.conf.get(_ARROW_CONF, None)
-        except Exception:
-            prior = None
-        try:
-            try:
-                spark.conf.set(_ARROW_CONF, "true")
-            except Exception:
-                pass  # conf locked down — boxed fallback below covers it
-            try:
-                df = spark.createDataFrame(pdf, schema=BLOCK_SCHEMA)
-            except Exception:
-                # Last-resort boxed path (pure-Python floats) for
-                # sessions where Arrow conversion is unavailable.
-                pdf = pdf.assign(data=[d.tolist() for d in pdf["data"]])
-                df = spark.createDataFrame(pdf, schema=BLOCK_SCHEMA)
-        finally:
-            try:
-                if prior is None:
-                    spark.conf.unset(_ARROW_CONF)
-                else:
-                    spark.conf.set(_ARROW_CONF, prior)
-            except Exception:
-                pass
+        df = spark.createDataFrame(
+            pa.Table.from_pandas(pdf, preserve_index=False),
+            schema=BLOCK_SCHEMA,
+        )
         return BlockMatrixFrame(df, n, m, block_size)
 
     @staticmethod

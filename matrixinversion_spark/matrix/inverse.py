@@ -27,7 +27,6 @@ from matrixinversion_spark.matrix import kernels
 from matrixinversion_spark.matrix.core import BlockMatrixFrame, block_diagonal
 from matrixinversion_spark.matrix.lu import (
     DEFAULT_LEAF,
-    _concurrently,
     _inv_leaf,
     _level_ck,
     auto_leaf,
@@ -46,10 +45,8 @@ def inverse_lower_unit(lo: BlockMatrixFrame,
     c = lo.slice_blocks(mb, lo.nbi, 0, mb)
     d = lo.slice_blocks(mb, lo.nbi, mb, lo.nbi)
     ck = _level_ck(mb * lo.block_size <= leaf_size or mb == 1)
-    ia, id_ = _concurrently(
-        lambda: ck(inverse_lower_unit(a, leaf_size)).persist(),
-        lambda: ck(inverse_lower_unit(d, leaf_size)).persist(),
-    )
+    ia = ck(inverse_lower_unit(a, leaf_size)).persist()
+    id_ = ck(inverse_lower_unit(d, leaf_size)).persist()
     corner = gemm(multiply(id_, c), ia, alpha=-1.0)
     df = ia.df.unionAll(corner.shift(mb, 0)).unionAll(id_.shift(mb, mb))
     return BlockMatrixFrame(df, lo.n_rows, lo.n_cols, lo.block_size)
@@ -65,10 +62,8 @@ def inverse_upper(up: BlockMatrixFrame,
     b = up.slice_blocks(0, mb, mb, up.nbj)
     d = up.slice_blocks(mb, up.nbi, mb, up.nbj)
     ck = _level_ck(mb * up.block_size <= leaf_size or mb == 1)
-    ia, id_ = _concurrently(
-        lambda: ck(inverse_upper(a, leaf_size)).persist(),
-        lambda: ck(inverse_upper(d, leaf_size)).persist(),
-    )
+    ia = ck(inverse_upper(a, leaf_size)).persist()
+    id_ = ck(inverse_upper(d, leaf_size)).persist()
     corner = gemm(multiply(ia, b), id_, alpha=-1.0)
     df = ia.df.unionAll(corner.shift(0, mb)).unionAll(id_.shift(mb, mb))
     return BlockMatrixFrame(df, up.n_rows, up.n_cols, up.block_size)

@@ -32,10 +32,9 @@ _DIM = 64  # derived-matrix edge; one 64×64 block
 
 @contextmanager
 def _pinned_exec(spark: SparkSession, grid_blocks: int):
-    """Job-level execution confs for the EAGER matrix demos — the
-    same two settings ``bench.py`` has always applied to the N=2048
-    inverse, scoped per query and restored in ``finally`` (r13
-    optimization round).
+    """Job-level execution confs for the EAGER matrix demos and
+    ``bench.py``'s N=2048 inverse, scoped per query and restored in
+    ``finally`` (r13 optimization round).
 
     Why: the recursive block pipelines run on a FIXED, tiny,
     uniformly-sized block grid (a handful of ~8 MB blocks whose
@@ -48,8 +47,7 @@ def _pinned_exec(spark: SparkSession, grid_blocks: int):
     for the span of the query and pinning shuffle partitions to the
     grid size is the per-job submit conf a production matrix
     pipeline would use (guide §2.4: remove runtime re-planning from
-    plans whose partitioning is already decided; bench.py carries
-    the same rationale for la_inverse_2048). Data-sized relational
+    plans whose partitioning is already decided). Data-sized relational
     queries are NOT wrapped — AQE earns its jobs there.
 
     Only queries whose heavy actions run INSIDE the builder (the

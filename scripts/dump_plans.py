@@ -427,8 +427,8 @@ NOTES: dict[str, str] = {
         "ends in the stats barrier (jobs 40 -> 33; the unbarriered "
         "loop nested 2^rounds plan copies), so the rounds execute "
         "eagerly and the final plan below is just the pinned "
-        "result — the per-round shape is in "
-        "plans/r13/q_label_propagation_after.txt."
+        "result — the per-round shape was in "
+        "plans/r13/q_label_propagation_after.txt (since deleted)."
     ),
     "p_kmv_source_jaccard": (
         "The corpus is scanned once into per-source bottom-k "
@@ -670,20 +670,19 @@ def markers(plan: str) -> str:
 
 def main() -> None:
     import __spark_entry__ as entry_mod
+    from matrixinversion_spark.profile import git_head
     from matrixinversion_spark.session import get_spark
 
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
 
-    from scripts.measure_r14 import _git_head
-
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = [
         "# PLANS — physical plans of headline queries (generated)",
         "",
         f"Regenerated by `python scripts/dump_plans.py` at "
-        f"sf_dir={SF_DIR}, HEAD {_git_head(repo_root)}.",
+        f"sf_dir={SF_DIR}, HEAD {git_head(repo_root)}.",
         "Each entry: condensed `.explain(\"formatted\")` operator tree,",
         "plan markers, and why this is the plan we want at 100 TB.",
         "",

@@ -41,22 +41,13 @@ SLOW_SET = [
 ]
 
 
-def dgemm_probe() -> float:
-    import numpy as np
-
-    a = np.random.rand(2048, 2048)
-    b = np.random.rand(2048, 2048)
-    t = time.time()
-    a @ b
-    return round(2 * 2048**3 / (time.time() - t) / 1e9, 1)
-
-
 def child(cpus: str, sf_dir: str, names: list[str]) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = cpus
     import __spark_entry__ as entry_mod
+    from matrixinversion_spark.profile import dgemm_gflops
     from matrixinversion_spark.session import get_spark
 
-    g0 = dgemm_probe()
+    g0 = dgemm_gflops()
     spark = get_spark(f"scaling_c{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
@@ -78,7 +69,7 @@ def child(cpus: str, sf_dir: str, names: list[str]) -> None:
                 "overwrite").save()
             runs.append(round(time.time() - t0, 3))
         out[name] = min(runs)
-    g1 = dgemm_probe()
+    g1 = dgemm_gflops()
     print("CHILD_JSON " + json.dumps(
         {"cpus": cpus, "dgemm": [g0, g1], "queries": out}
     ), flush=True)

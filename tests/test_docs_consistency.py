@@ -62,3 +62,16 @@ def test_survey_names_exist_in_registry():
     srv = _doc_names((ROOT / "SURVEY.md").read_text())
     unknown = sorted(srv - reg)
     assert not unknown, f"SURVEY.md cites unregistered names: {unknown}"
+
+
+def test_documented_scripts_exist():
+    # a deleted script must not stay documented as a way to run things
+    docs = ("README.md", ".claude/skills/verify/SKILL.md")
+    missing = sorted(
+        f"{doc}: {path}"
+        for doc in docs
+        for path in set(re.findall(r"scripts/[\w./-]*\w",
+                                   (ROOT / doc).read_text()))
+        if not (ROOT / path).exists()
+    )
+    assert not missing, f"docs name scripts that do not exist: {missing}"

@@ -19,6 +19,7 @@ from matrixinversion_spark.matrix import qr as qrmod
 from matrixinversion_spark.matrix.core import (
     BlockMatrixFrame, assemble, decode_blocks, encode_blocks, tile,
 )
+from matrixinversion_spark.profile import profiled
 
 
 @pytest.fixture(scope="module")
@@ -144,6 +145,21 @@ def test_tile_zero_blocks():
     assert [k[:2] for k in tile(a, 3, keep_zeros=False)] == [(1, 0)]
     assert np.array_equal(assemble(tile(a, 3, keep_zeros=False), 5, 5, 3),
                           a)
+
+
+def test_from_numpy_needs_no_arrow_conf(spark, rng):
+    """A bare session has Arrow conversion off; ingest still ships
+    the payloads through Arrow, exactly, and leaves the conf alone."""
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        a = rng.random((96, 96))
+        m = BlockMatrixFrame.from_numpy(spark, a, 32)
+        assert spark.conf.get(conf) == "false"
+        assert np.array_equal(m.to_numpy(), a)
+    finally:
+        spark.conf.set(conf, prior)
 
 
 def test_lu_residual_and_structure(spark, rng):
@@ -490,9 +506,7 @@ def test_solvers_reject_bad_shapes_before_any_job(spark, rng):
     short_b = _bm(spark, rng.random((32, 1)))
     wide = _bm(spark, rng.random((64, 32)))
     b = _bm(spark, rng.random((64, 1)))
-    sc = spark.sparkContext
-    sc.setJobGroup("bad-shapes", "solver shape checks")
-    try:
+    with profiled(spark, "bad-shapes") as p:
         for solve in (cg_solve, bicgstab_solve):
             with pytest.raises(ValueError, match="64x64.*32x1"):
                 solve(a, short_b)
@@ -500,6 +514,4 @@ def test_solvers_reject_bad_shapes_before_any_job(spark, rng):
             cg_solve(wide, b)
         with pytest.raises(ValueError, match=r"64x64.*\(63,\)"):
             ops.matvec(a, np.ones(63))
-        assert sc.statusTracker().getJobIdsForGroup("bad-shapes") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert p.jobs == 0

@@ -47,7 +47,8 @@ class TestFusedInversePlanPin:
 
     def test_job_fingerprint_and_residual_2048(self, spark):
         # Exact bench geometry (bench.py INVERSE_*): N=2048, 1024
-        # blocks, leaf 1024, AQE off, shuffle partitions = 2·grid.
+        # blocks, leaf 1024, under bench's execution scope
+        # (``_pinned_exec``: AQE off, 8 shuffle partitions here).
         # The whole inverse must execute as ONE Spark job, the noop
         # write: every gemm is a routed exchange, a stage of that job.
         # A gemm built on a join ran 5 (with AQE off each small join
@@ -56,29 +57,19 @@ class TestFusedInversePlanPin:
         from matrixinversion_spark.matrix import inverse as invmod
         from matrixinversion_spark.matrix import ops
         from matrixinversion_spark.matrix.core import BlockMatrixFrame
+        from matrixinversion_spark.matrix.queries import _pinned_exec
+        from matrixinversion_spark.profile import profiled
 
         n, bs, leaf = 2048, 1024, 1024
-        tracker = spark.sparkContext.statusTracker()
-
-        def max_job():
-            ids = tracker.getJobIdsForGroup(None)
-            return max(ids) if ids else -1
-
-        aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(2 * (n // bs) ** 2)
-        )
-        try:
+        with _pinned_exec(spark, (n // bs) ** 2):
             a = BlockMatrixFrame.random_uniform(
                 spark, n, block_size=bs, seed=45
             ).persist()
             a.df.count()
-            j0 = max_job()
-            ainv = invmod.inverse(a, leaf_size=leaf)
-            ainv.df.write.format("noop").mode("overwrite").save()
-            jobs = max_job() - j0
+            with profiled(spark, "fused-inverse") as p:
+                ainv = invmod.inverse(a, leaf_size=leaf)
+                ainv.df.write.format("noop").mode("overwrite").save()
+            jobs = p.jobs
             assert jobs == 1, (
                 f"fused inverse at N={n} ran {jobs} Spark jobs "
                 "(pinned: 1) — plan shape regressed"
@@ -89,9 +80,6 @@ class TestFusedInversePlanPin:
             assert err < 1e-8 * n, f"‖A·A⁻¹−I‖∞ = {err}"
             ainv.release()
             a.unpersist()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
 
     def test_inverse_releases_intermediate_caches(self, spark):
         # ADVICE r9: repeated inversions in one session must not

@@ -130,16 +130,14 @@ def test_barrier_fallback_correct_and_warns_once(spark, monkeypatch):
     shape must stay the same). A silent behavior change on either
     path now fails a test instead of shipping."""
     import matrixinversion_spark.pipeline.curation as cur
+    from matrixinversion_spark.profile import profiled
 
     edges = _chain_edges(spark, 16).localCheckpoint(eager=True)
-    tracker = spark.sparkContext.statusTracker()
 
     def jobs_during(fn):
-        ids0 = tracker.getJobIdsForGroup(None)
-        j0 = max(ids0) if ids0 else -1
-        out = fn()
-        ids1 = tracker.getJobIdsForGroup(None)
-        return out, (max(ids1) if ids1 else -1) - j0
+        with profiled(spark, "connected-components") as p:
+            out = fn()
+        return out, p.jobs
 
     (labels_ok, rounds_ok), jobs_ok = jobs_during(
         lambda: cur.connected_components(edges)

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from matrixinversion_spark import session
+from matrixinversion_spark.profile import profiled
 
 
 def test_malformed_graft_cpus_raises(spark, monkeypatch):
@@ -22,11 +23,6 @@ def test_malformed_graft_cpus_raises(spark, monkeypatch):
     assert session._shuffle_partitions(None) == "32"
 
 
-def _max_job_id(spark) -> int:
-    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    return max(ids) if ids else -1
-
-
 def _write_table(path: str, columns: dict) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -37,9 +33,9 @@ def _write_table(path: str, columns: dict) -> None:
 def test_second_read_table_runs_no_job(spark, tmp_path):
     _write_table(str(tmp_path / "t.parquet"), {"a": [1, 2, 3]})
     first = session.read_table(spark, str(tmp_path), "t")
-    j0 = _max_job_id(spark)
-    again = session.read_table(spark, str(tmp_path), "t")
-    assert _max_job_id(spark) == j0
+    with profiled(spark, "second-read") as p:
+        again = session.read_table(spark, str(tmp_path), "t")
+    assert p.jobs == 0
     assert again.schema == first.schema
     assert sorted(r.a for r in again.collect()) == [1, 2, 3]
 
