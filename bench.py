@@ -88,7 +88,6 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from matrixinversion_spark.matrix import inverse as invmod
     from matrixinversion_spark.matrix.core import BlockMatrixFrame
-    from matrixinversion_spark.matrix.queries import _pinned_exec
     from matrixinversion_spark.profile import profiled
     from matrixinversion_spark.session import get_spark, load_tables
 
@@ -177,11 +176,11 @@ def main() -> None:
     # the reference's actual workload: dense matrix inversion at its
     # demonstrated scale (N=2048; `Matrix/run.csh` pipeline O19).
     # Generation is timed separately (the reference's MakeData is its
-    # own program, run before the LU job). The inverse runs under the
-    # matrix queries' execution scope (AQE off, shuffle partitions
-    # matched to the block grid; see ``_pinned_exec``). Median of 3
-    # runs — the single-run variance band on this harness is ±50%
-    # (BENCH_NOTES).
+    # own program, run before the LU job). Like every matrix frame,
+    # the inverse runs in the matrix session (AQE off, each exchange
+    # sized from the block grid; see ``session.matrix_session``), as
+    # one Spark job. Median of 3 runs — the single-run variance band
+    # on this harness is ±50% (BENCH_NOTES).
     t0 = time.time()
     a = BlockMatrixFrame.random_uniform(
         spark, INVERSE_N, block_size=INVERSE_BLOCK, seed=45
@@ -189,30 +188,29 @@ def main() -> None:
     a.df.count()
     timings["la_generate_2048"] = round(time.time() - t0, 3)
 
-    with _pinned_exec(spark, (INVERSE_N // INVERSE_BLOCK) ** 2):
-        runs = []
-        results = []
-        for _ in range(3):
-            with profiled(spark, f"la_inverse_{INVERSE_N}") as p:
-                ainv = invmod.inverse(a, leaf_size=INVERSE_LEAF)
-                ainv.df.write.format("noop").mode("overwrite").save()
-            runs.append(p.wall_s)
-            results.append(ainv)
-        inverse_jobs = p.jobs
-        # Release AFTER all three runs, not between them: the three
-        # plans are identical (same seed, same cached A), so Spark's
-        # CacheManager substitutes run 1's persisted subtrees into
-        # runs 2-3 — the median is therefore a CACHE-WARM rerun
-        # (steady-state of a session reusing one factorization),
-        # which is what this metric has measured every round.
-        # Releasing inside the loop makes every run cold and ~2.5x
-        # slower — a methodology change, not a regression
-        # (BENCH_NOTES round 10 records both numbers). Identical
-        # re-persists don't accrete (CacheManager dedups by plan);
-        # the release here still frees the session for what follows.
-        for r in results:
-            r.release()
-        timings[f"la_inverse_{INVERSE_N}"] = round(sorted(runs)[1], 3)
+    runs = []
+    results = []
+    for _ in range(3):
+        with profiled(spark, f"la_inverse_{INVERSE_N}") as p:
+            ainv = invmod.inverse(a, leaf_size=INVERSE_LEAF)
+            ainv.df.write.format("noop").mode("overwrite").save()
+        runs.append(p.wall_s)
+        results.append(ainv)
+    inverse_jobs = p.jobs
+    # Release AFTER all three runs, not between them: the three
+    # plans are identical (same seed, same cached A), so Spark's
+    # CacheManager substitutes run 1's persisted subtrees into
+    # runs 2-3 — the median is therefore a CACHE-WARM rerun
+    # (steady-state of a session reusing one factorization),
+    # which is what this metric has measured every round.
+    # Releasing inside the loop makes every run cold and ~2.5x
+    # slower — a methodology change, not a regression
+    # (BENCH_NOTES round 10 records both numbers). Identical
+    # re-persists don't accrete (CacheManager dedups by plan);
+    # the release here still frees the session for what follows.
+    for r in results:
+        r.release()
+    timings[f"la_inverse_{INVERSE_N}"] = round(sorted(runs)[1], 3)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:

@@ -13,9 +13,15 @@ is one explicit-schema DataFrame:
   blocks, and every operator treats a missing block as zeros (the
   join/aggregation algebra does this for free).
 - Lineage and ``persist()`` replace the reference's HDFS side-channel
-  re-reads (`Read_LU.java`); a shuffle on block coordinates replaces
-  its hand-rolled partitioner (`MyPartitioner`,
-  `LUDecomposition.java:653-659`).
+  re-reads (`Read_LU.java`); a shuffle on block coordinates, sized
+  from the block grid, replaces its hand-rolled partitioner
+  (`MyPartitioner`, `LUDecomposition.java:653-659`).
+- Every frame lives in the matrix session of its SparkContext
+  (``session.matrix_session``: AQE off). The constructors build their
+  DataFrame there, every op derives from ``df`` and stays there, and
+  a DataFrame built in a caller's session enters through one seam,
+  ``BlockMatrixFrame.from_blocks``. The caller's conf never governs a
+  matrix plan, and a lazy ``checkpoint`` runs no job.
 
 The layout is known in this module alone. Python code reads and
 writes blocks through its codec — ``decode_blocks`` (block-schema
@@ -33,6 +39,7 @@ and the (bi, bj) key is perfectly uniform so block shuffles never skew.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 
@@ -43,15 +50,28 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from matrixinversion_spark.session import matrix_session
+
 BLOCK_SCHEMA = "bi int, bj int, rows int, cols int, data array<double>"
 BLOCK_COLUMNS = ["bi", "bj", "rows", "cols", "data"]
 DEFAULT_BLOCK_SIZE = 1024
+# payload bytes per partition of a data-sized frame (data_partitions)
+PARTITION_BYTES = 64 * 1024 * 1024
 
 Block = tuple[int, int, np.ndarray]
 
 
 def _nblocks(n: int, bs: int) -> int:
     return (n + bs - 1) // bs
+
+
+def data_partitions(n_rows: int, n_cols: int, bs: int) -> int:
+    """Partitions for the blocks of an n_rows×n_cols matrix, sized by
+    payload: one per ``PARTITION_BYTES`` of dense payload, at most one
+    per block, at least one."""
+    nbytes = 8 * n_rows * n_cols
+    return max(1, min(_nblocks(n_rows, bs) * _nblocks(n_cols, bs),
+                      -(-nbytes // PARTITION_BYTES)))
 
 
 # -- block codec: the one place the payload layout is known -----------
@@ -173,7 +193,9 @@ class BlockMatrixFrame:
     def from_numpy(spark: SparkSession, a: np.ndarray,
                    block_size: int = DEFAULT_BLOCK_SIZE,
                    keep_zeros: bool = False) -> "BlockMatrixFrame":
-        """Driver-side ingest (tests/leaves); zero blocks dropped."""
+        """Driver-side ingest (tests/leaves); zero blocks dropped.
+        The frame has ``data_partitions`` partitions, not one per
+        core: a matvec costs one Python task per partition."""
         a = np.asarray(a, dtype=np.float64)
         n, m = a.shape
         # A pyarrow.Table always goes through Arrow, whatever the
@@ -181,11 +203,31 @@ class BlockMatrixFrame:
         # leaf factor is ~8 MB; boxing each cell into a Python float
         # was the driver bottleneck).
         pdf = encode_blocks(tile(a, block_size, keep_zeros=keep_zeros))
-        df = spark.createDataFrame(
+        df = matrix_session(spark).createDataFrame(
             pa.Table.from_pandas(pdf, preserve_index=False),
             schema=BLOCK_SCHEMA,
         )
+        df = df.coalesce(data_partitions(n, m, block_size))
         return BlockMatrixFrame(df, n, m, block_size)
+
+    @staticmethod
+    def from_blocks(df: DataFrame, n_rows: int, n_cols: int,
+                    block_size: int) -> "BlockMatrixFrame":
+        """A frame over a block-schema DataFrame ``df`` built in any
+        session — the one seam between a caller's plan and the matrix
+        session. ``df`` runs once, in its own session (one eager local
+        checkpoint), so its relational work keeps the caller's conf,
+        AQE included; the blocks then enter the matrix session
+        through a global temp view, dropped once read. Classic
+        PySpark would run a mixed-session plan under one session's
+        conf, and Spark Connect forbids one."""
+        ms = matrix_session(df.sparkSession)
+        if df.sparkSession is not ms:
+            view = f"matrix_{uuid.uuid4().hex}"
+            df.localCheckpoint(eager=True).createGlobalTempView(view)
+            df = ms.table(f"global_temp.{view}")
+            ms.catalog.dropGlobalTempView(view)
+        return BlockMatrixFrame(df, n_rows, n_cols, block_size)
 
     @staticmethod
     def random_uniform(spark: SparkSession, n: int, m: int | None = None,
@@ -199,7 +241,7 @@ class BlockMatrixFrame:
         bs = block_size
         nbi, nbj = _nblocks(n, bs), _nblocks(m, bs)
 
-        grid = spark.range(nbi * nbj).select(
+        grid = matrix_session(spark).range(nbi * nbj).select(
             (F.col("id") / nbj).cast("int").alias("bi"),
             (F.col("id") % nbj).cast("int").alias("bj"),
         )
@@ -234,7 +276,7 @@ class BlockMatrixFrame:
                     for bi in pdf["bi"]
                 )
 
-        grid = spark.range(_nblocks(n, bs)).select(
+        grid = matrix_session(spark).range(_nblocks(n, bs)).select(
             F.col("id").cast("int").alias("bi")
         )
         df = grid.mapInPandas(gen, schema=BLOCK_SCHEMA)

@@ -178,7 +178,7 @@ def read_reference_matrix(
         return encode_blocks([(bi, bj, blk)])
 
     blocks = pieces.groupBy("bi", "bj").applyInPandas(assemble, BLOCK_SCHEMA)
-    return BlockMatrixFrame(blocks, n_rows, n_cols, bs)
+    return BlockMatrixFrame.from_blocks(blocks, n_rows, n_cols, bs)
 
 
 def parse_indirection_file(
@@ -514,6 +514,7 @@ def write_inverse_text(
 
     written = (
         m.df.mapInPandas(to_strides, seg_schema)
+        .repartition(n_u * n_l, "n0", "n1")
         .groupBy("n0", "n1")
         .applyInPandas(write_file, "path string, n long")
         .count()

@@ -68,14 +68,14 @@ def auto_leaf(n: int) -> int:
 
 def _level_ck(child_is_leaf: bool):
     """Depth-aware lineage control, measured on the fused inverse
-    (``inverse._lu_inv_rec``, N=2048/N=4096 A/B): at the lowest
-    internal recursion level the children are leaf task outputs —
-    already persisted, two-step lineage — and localCheckpoint's
-    serialized materialization jobs dominate the wall (7.8 -> 4.0 s
-    median at N=2048 without them), so plain persist suffices. One
-    level up the opposite holds: without checkpoints the recursive
-    plan triples Catalyst analysis time (4.7 -> 12.8 s plan-build at
-    N=4096). Returns the identity at leaf-adjacent levels, a lazy
+    (``inverse._lu_inv_rec``): at the lowest internal recursion level
+    the children are leaf task outputs — already persisted, two-step
+    lineage — so plain persist suffices; checkpointing them too
+    measured the same in the matrix session (N=2048, bs=256, leaf
+    256: 1 job either way, exec median 25.3 against 25.2 s). One level
+    up, checkpoints keep the plan buildable: without any, that
+    inverse had not finished in 5 min against ~30 s. Returns the
+    identity at leaf-adjacent levels, a lazy
     ``BlockMatrixFrame.checkpoint`` above."""
     return (lambda m: m) if child_is_leaf else BlockMatrixFrame.checkpoint
 

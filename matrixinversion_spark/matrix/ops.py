@@ -7,17 +7,23 @@ grid matmul + subtract (O11, `LUDecomposition.java:495-651`), the
 final U⁻¹·L⁻¹ multiply (O17, `LUInverse.java:169-389`), and the pivot
 application at read time (P12, `Read_LU.java:66-92,129-132`).
 
-Physical shapes, 100 TB honest:
+Physical shapes, 100 TB honest. Every frame runs in the AQE-off
+matrix session (``session.matrix_session``), so each exchange below
+takes its partition count from the blocks it produces, fixed before
+execution, and a whole recursion runs as one Spark job:
 
 - ``multiply``/``gemm`` — one routed exchange of ``nbj·|A| +
-  nbi·|B| + |C|`` bytes on the uniform (bi,bj) key, then one grouped
-  numpy kernel that pairs blocks by k (dgemm per block pair — the
-  dense kernel *is* the payload, at ~8 MB Arrow batches);
-  ``k_chunk`` adds a kc group key and one (bi,bj) merge. The
+  nbi·|B| + |C|`` bytes on the uniform (bi,bj) key into ``nbi·nbj``
+  partitions, one per output block, then one grouped numpy kernel
+  that pairs blocks by k (dgemm per block pair — the dense kernel
+  *is* the payload, at ~8 MB Arrow batches); ``k_chunk`` adds a kc
+  group key and one (bi,bj) merge into the same ``nbi·nbj``. The
   reference hand-routes the same dataflow through HDFS files + a
   task-number partitioner.
 - ``add``/``subtract`` — full-outer join on (bi,bj) + JVM ``zip_with``;
-  absent blocks are zeros. No Python.
+  absent blocks are zeros. No Python. Both sides hash into
+  ``core.data_partitions`` partitions (one per 64 MB of payload, at
+  most one per block), which the join reuses.
 - ``transpose`` — per-block numpy transpose + (bi,bj) swap; block
   remap only, no shuffle (narrow dependency).
 - ``matvec`` — A·x for a driver-held vector x: x is broadcast, each
@@ -26,10 +32,12 @@ Physical shapes, 100 TB honest:
   only distributed step.
 - ``permute_rows`` — the pivot gather: a driver-built (tiny) block
   routing table joined to the blocks, then per-output-block row
-  assembly. Replaces the reference's recursive pivot composition and
-  read-time row indirection.
+  assembly into ``core.data_partitions`` partitions. Replaces the
+  reference's recursive pivot composition and read-time row
+  indirection.
 - ``leaf_task`` — every recursion leaf's dense numpy work (leaf LU,
-  triangular inversion): one executor task for the whole leaf.
+  triangular inversion): one exchange into one partition, one
+  executor task for the whole leaf.
 
 Every Python kernel here reads and writes blocks through the codec
 in ``core`` (``decode_blocks``/``encode_blocks``, ``tile``/
@@ -47,8 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matrixinversion_spark.matrix.core import (
-    BLOCK_COLUMNS, BLOCK_SCHEMA, BlockMatrixFrame, assemble, decode_blocks,
-    encode_blocks, tile,
+    BLOCK_COLUMNS, BLOCK_SCHEMA, BlockMatrixFrame, assemble, data_partitions,
+    decode_blocks, encode_blocks, tile,
 )
 
 
@@ -139,10 +147,14 @@ def gemm(a: BlockMatrixFrame, b: BlockMatrixFrame,
         return _block_sum(
             ((bi, bj, alpha * (a_k[k] @ b_k[k])) for k in ks), bias)
 
-    out = routed.groupBy(*keys).applyInPandas(pair_sum, BLOCK_SCHEMA)
+    # one partition per output block; the grouping reuses the exchange
+    n_out = a.nbi * b.nbj
+    out = (routed.repartition(n_out, "bi", "bj").groupBy(*keys)
+           .applyInPandas(pair_sum, BLOCK_SCHEMA))
     if k_chunk is not None:
-        out = out.groupBy("bi", "bj").applyInPandas(
-            lambda pdf: _block_sum(decode_blocks(pdf)), BLOCK_SCHEMA)
+        out = (out.repartition(n_out, "bi", "bj").groupBy("bi", "bj")
+               .applyInPandas(lambda pdf: _block_sum(decode_blocks(pdf)),
+                              BLOCK_SCHEMA))
     return BlockMatrixFrame(out, a.n_rows, b.n_cols, a.block_size)
 
 
@@ -169,11 +181,13 @@ def _axpy(a: BlockMatrixFrame, b: BlockMatrixFrame,
     """A + beta·B with absent-block = zeros (full outer join)."""
     if (a.n_rows, a.n_cols) != (b.n_rows, b.n_cols):
         raise ValueError("shape mismatch in add/subtract")
-    la = a.df.select(
+    # both sides hashed alike, so the join adds no exchange of its own
+    n = data_partitions(a.n_rows, a.n_cols, a.block_size)
+    la = a.df.repartition(n, "bi", "bj").select(
         "bi", "bj", F.col("rows").alias("a_rows"),
         F.col("cols").alias("a_cols"), F.col("data").alias("a_data"),
     )
-    rb = b.df.select(
+    rb = b.df.repartition(n, "bi", "bj").select(
         "bi", "bj", F.col("rows").alias("b_rows"),
         F.col("cols").alias("b_cols"), F.col("data").alias("b_data"),
     )
@@ -196,8 +210,10 @@ def _axpy(a: BlockMatrixFrame, b: BlockMatrixFrame,
 def matvec(a: BlockMatrixFrame, x: np.ndarray) -> np.ndarray:
     """A·x as a driver ndarray of length ``a.n_rows``, for a driver
     vector ``x`` of length ``a.n_cols`` (flat or a column). One narrow
-    job over ``a.df`` whatever its partitioning; absent blocks are
-    zeros."""
+    job over ``a.df``, coalesced to ``data_partitions`` tasks whatever
+    its partitioning — each costs a Python task, and a gemm output
+    has one partition per block — so pin ``a`` first; absent blocks
+    are zeros."""
     x = np.asarray(x, dtype=np.float64)
     if x.shape not in ((a.n_cols,), (a.n_cols, 1)):
         raise ValueError(
@@ -219,9 +235,9 @@ def matvec(a: BlockMatrixFrame, x: np.ndarray) -> np.ndarray:
             yield pd.DataFrame({"bi": list(acc), "y": list(acc.values())})
 
     try:
-        rows = a.df.mapInPandas(
-            partial_rows, "bi int, y array<double>"
-        ).collect()
+        rows = a.df.coalesce(
+            data_partitions(a.n_rows, a.n_cols, bs)
+        ).mapInPandas(partial_rows, "bi int, y array<double>").collect()
     finally:
         bx.destroy()
     out = np.zeros(a.n_rows)
@@ -288,7 +304,8 @@ def permute_rows(a: BlockMatrixFrame, perm: np.ndarray) -> BlockMatrixFrame:
     )
     routing = spark.createDataFrame(pairs, "bi_out int, bi int")
 
-    joined = a.df.join(F.broadcast(routing), "bi")
+    joined = a.df.join(F.broadcast(routing), "bi").repartition(
+        data_partitions(a.n_rows, a.n_cols, bs), "bi_out", "bj")
 
     def gather(pdf: pd.DataFrame) -> pd.DataFrame:
         bi_out = int(pdf["bi_out"].iloc[0])
@@ -399,6 +416,7 @@ def leaf_task(a: BlockMatrixFrame,
     # bare integer literal in groupBy as a GROUP BY ordinal
     df = (
         a.df.withColumn("_g", F.lit(1))
+        .repartition(1)
         .groupBy("_g")
         .applyInPandas(task, f"tag int, {BLOCK_SCHEMA}" if tagged
                        else BLOCK_SCHEMA)

@@ -39,7 +39,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from matrixinversion_spark.matrix.core import (
-    BLOCK_SCHEMA, BlockMatrixFrame, decode_blocks, encode_blocks,
+    BLOCK_SCHEMA, BlockMatrixFrame, data_partitions, decode_blocks,
+    encode_blocks,
 )
 
 _R_SCHEMA = "g int, data array<double>"
@@ -83,13 +84,18 @@ def tsqr_r(a: BlockMatrixFrame, fanout: int = 8) -> np.ndarray:
         return pd.DataFrame([(g, _qr_r(stacked).ravel())],
                             columns=["g", "data"])
 
-    lvl = a.df.mapInPandas(local_r, schema=_R_SCHEMA)
+    # one local QR task per 64 MB of panel, not one per row block
+    panel = a.df.coalesce(data_partitions(a.n_rows, a.n_cols, a.block_size))
+    lvl = panel.mapInPandas(local_r, schema=_R_SCHEMA)
     width = a.nbi
     while width > 1:
-        lvl = lvl.groupBy(
-            (F.col("g") / F.lit(fanout)).cast("int").alias("_gg")
-        ).applyInPandas(lambda pdf: reduce_r(pdf), _R_SCHEMA)
+        # one partition per tree node of the level
         width = -(-width // fanout)
+        lvl = (
+            lvl.withColumn("_gg", (F.col("g") / F.lit(fanout)).cast("int"))
+            .repartition(width, "_gg")
+            .groupBy("_gg").applyInPandas(reduce_r, _R_SCHEMA)
+        )
 
     flat = lvl.collect()[0]["data"]
     r = np.asarray(flat, dtype=np.float64).reshape(k, k)

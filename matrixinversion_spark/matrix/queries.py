@@ -10,7 +10,7 @@ records them as rows-only; pytest asserts the numerical properties).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -28,50 +28,6 @@ from matrixinversion_spark.registry import query
 from matrixinversion_spark.session import read_table
 
 _DIM = 64  # derived-matrix edge; one 64×64 block
-
-
-@contextmanager
-def _pinned_exec(spark: SparkSession, grid_blocks: int):
-    """Job-level execution confs for the EAGER matrix demos and
-    ``bench.py``'s N=2048 inverse, scoped per query and restored in
-    ``finally`` (r13 optimization round).
-
-    Why: the recursive block pipelines run on a FIXED, tiny,
-    uniformly-sized block grid (a handful of ~8 MB blocks whose
-    partitioning is known a priori), but execute as a long chain of
-    sequential exchanges. AQE materializes every exchange as its own
-    job to re-plan it — pure driver round-trip latency here, since
-    there is nothing adaptive to decide on ≤32 equal-size blocks
-    (measured this round: la_lu_residual 92 jobs/15.1 s with AQE on
-    → see OPTIMIZATION_r13.md for the after numbers). Disabling AQE
-    for the span of the query and pinning shuffle partitions to the
-    grid size is the per-job submit conf a production matrix
-    pipeline would use (guide §2.4: remove runtime re-planning from
-    plans whose partitioning is already decided). Data-sized relational
-    queries are NOT wrapped — AQE earns its jobs there.
-
-    Only queries whose heavy actions run INSIDE the builder (the
-    residual/property family — they end in ``collect``/``to_numpy``)
-    use this; queries returning lazy data-sized frames must not,
-    because the conf would be restored before execution.
-
-    NOT thread-safe (ADVICE r13): the two confs are session-global
-    for the span of the query, so any OTHER query running
-    concurrently on the same SparkSession would silently execute
-    with AQE off and a tiny partition count. Fine for the driver's
-    serial gate/bench; guard with a lock before ever running matrix
-    queries concurrently on one session.
-    """
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(max(grid_blocks, 8)))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _lineitem_coo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,7 +55,7 @@ def _lineitem_matrix(spark: SparkSession, sf_dir: str) -> BlockMatrixFrame:
         _lineitem_coo(spark, sf_dir).withColumn("bi", F.lit(0))
         .groupBy("bi").applyInPandas(assemble, BLOCK_SCHEMA)
     )
-    return BlockMatrixFrame(df, _DIM, _DIM, _DIM)
+    return BlockMatrixFrame.from_blocks(df, _DIM, _DIM, _DIM)
 
 
 def _coo(m: BlockMatrixFrame) -> DataFrame:
@@ -107,20 +63,19 @@ def _coo(m: BlockMatrixFrame) -> DataFrame:
     (i, j, val) rounded to 3 decimals."""
     bs = m.block_size
 
-    def to_coo(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for bi, bj, blk in decode_blocks(pdf):
-            ii, jj = np.nonzero(np.round(blk, 3))
-            for i, j in zip(ii, jj):
-                out.append(
-                    (bi * bs + int(i), bj * bs + int(j),
-                     float(np.round(blk[i, j], 3)))
-                )
-        return pd.DataFrame(out, columns=["i", "j", "val"])
+    def to_coo(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for bi, bj, blk in decode_blocks(pdf):
+                ii, jj = np.nonzero(np.round(blk, 3))
+                for i, j in zip(ii, jj):
+                    out.append(
+                        (bi * bs + int(i), bj * bs + int(j),
+                         float(np.round(blk[i, j], 3)))
+                    )
+            yield pd.DataFrame(out, columns=["i", "j", "val"])
 
-    return m.df.groupBy("bi", "bj").applyInPandas(
-        to_coo, "i int, j int, val double"
-    )
+    return m.df.mapInPandas(to_coo, "i int, j int, val double")
 
 
 @query(
@@ -162,15 +117,12 @@ def la_lu_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     to exactly 0.0 at 6 decimals and ``ok`` asserts the tolerance, so
     the driver hash-checks the literal expectation. Pytest asserts the
     raw tolerance independently."""
-    with _pinned_exec(spark, (256 // 64) ** 2):
-        a = BlockMatrixFrame.random_uniform(
-            spark, 256, block_size=64, seed=42
-        )
-        a.persist()
-        perm, lo, up = lumod.lu(a, leaf_size=128)
-        residual = ops.max_abs_diff(
-            ops.permute_rows(a, perm), ops.multiply(lo, up)
-        )
+    a = BlockMatrixFrame.random_uniform(spark, 256, block_size=64, seed=42)
+    a.persist()
+    perm, lo, up = lumod.lu(a, leaf_size=128)
+    residual = ops.max_abs_diff(
+        ops.permute_rows(a, perm), ops.multiply(lo, up)
+    )
     return spark.createDataFrame(
         [(256, float(round(residual, 6)), bool(residual < 1e-10 * 256))],
         "n int, residual_r6 double, ok boolean",
@@ -186,14 +138,11 @@ def la_inverse_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     256² uniform matrix (SURVEY.md §5 property golden). Driver-checked
     via the rounded-residual trick (see la_lu_residual; leaf=128 for
     the same one-recursion-level stage-count reason)."""
-    with _pinned_exec(spark, (256 // 64) ** 2):
-        a = BlockMatrixFrame.random_uniform(
-            spark, 256, block_size=64, seed=42
-        )
-        a.persist()
-        ainv = invmod.inverse(a, leaf_size=128)
-        err = ops.max_abs_diff_from_identity(ops.multiply(a, ainv))
-        ainv.release()  # the residual action above consumed the caches
+    a = BlockMatrixFrame.random_uniform(spark, 256, block_size=64, seed=42)
+    a.persist()
+    ainv = invmod.inverse(a, leaf_size=128)
+    err = ops.max_abs_diff_from_identity(ops.multiply(a, ainv))
+    ainv.release()  # the residual action above consumed the caches
     return spark.createDataFrame(
         [(256, float(round(err, 6)), bool(err < 1e-8 * 256))],
         "n int, identity_err_r6 double, ok boolean",
@@ -245,25 +194,20 @@ def la_cholesky_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from matrixinversion_spark.matrix import cholesky as cholmod
 
     n = 256
-    with _pinned_exec(spark, (n // 64) ** 2):
-        b = BlockMatrixFrame.random_uniform(
-            spark, n, block_size=64, seed=42
-        )
-        b.persist()
-        a = ops.add(
-            ops.multiply(b, ops.transpose(b)),
-            ops.scale(
-                BlockMatrixFrame.identity(spark, n, block_size=64),
-                float(n),
-            ),
-        )
-        a.persist()
-        lo = cholmod.cholesky(a, leaf_size=128)
-        residual = ops.max_abs_diff(
-            ops.multiply(lo, ops.transpose(lo)), a
-        )
-        logdet = cholmod.chol_logdet(lo)
-        sign_np, logdet_np = np.linalg.slogdet(a.to_numpy())
+    b = BlockMatrixFrame.random_uniform(spark, n, block_size=64, seed=42)
+    b.persist()
+    a = ops.add(
+        ops.multiply(b, ops.transpose(b)),
+        ops.scale(
+            BlockMatrixFrame.identity(spark, n, block_size=64),
+            float(n),
+        ),
+    )
+    a.persist()
+    lo = cholmod.cholesky(a, leaf_size=128)
+    residual = ops.max_abs_diff(ops.multiply(lo, ops.transpose(lo)), a)
+    logdet = cholmod.chol_logdet(lo)
+    sign_np, logdet_np = np.linalg.slogdet(a.to_numpy())
     logdet_ok = bool(
         sign_np > 0 and abs(logdet - logdet_np) <= 1e-6 * abs(logdet_np)
     )
@@ -366,17 +310,12 @@ def la_solve_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage-count reason — each triangular solve becomes two leaf
     solves plus one Schur gemm instead of a deeper serial chain)."""
     n, k = 256, 8
-    with _pinned_exec(spark, (n // 64) ** 2):
-        a = BlockMatrixFrame.random_uniform(
-            spark, n, block_size=64, seed=42
-        )
-        a.persist()
-        b = BlockMatrixFrame.random_uniform(
-            spark, n, m=k, block_size=64, seed=7
-        )
-        b.persist()
-        x = invmod.solve(a, b, leaf_size=128)
-        residual = ops.max_abs_diff(ops.multiply(a, x), b)
+    a = BlockMatrixFrame.random_uniform(spark, n, block_size=64, seed=42)
+    a.persist()
+    b = BlockMatrixFrame.random_uniform(spark, n, m=k, block_size=64, seed=7)
+    b.persist()
+    x = invmod.solve(a, b, leaf_size=128)
+    residual = ops.max_abs_diff(ops.multiply(a, x), b)
     return spark.createDataFrame(
         [(n, k, float(round(residual, 6)), bool(residual < 1e-8 * n))],
         "n int, n_rhs int, residual_r6 double, ok boolean",
@@ -396,13 +335,10 @@ def la_determinant(spark: SparkSession, sf_dir: str) -> DataFrame:
     factors as one 32² leaf + solves + one 64² Schur leaf — one
     recursion level instead of two (see la_lu_residual)."""
     n = 96
-    with _pinned_exec(spark, (n // 32) ** 2):
-        a = BlockMatrixFrame.random_uniform(
-            spark, n, block_size=32, seed=42
-        )
-        a.persist()
-        det = invmod.determinant(a, leaf_size=64)
-        sign_np, log_np = np.linalg.slogdet(a.to_numpy())
+    a = BlockMatrixFrame.random_uniform(spark, n, block_size=32, seed=42)
+    a.persist()
+    det = invmod.determinant(a, leaf_size=64)
+    sign_np, log_np = np.linalg.slogdet(a.to_numpy())
     ok = bool(
         det != 0.0
         and np.sign(det) == sign_np
@@ -453,7 +389,7 @@ def la_matmul_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .applyInPandas(assemble, BLOCK_SCHEMA)
     )
-    m = BlockMatrixFrame(blocks, _DIM, _DIM, bs)
+    m = BlockMatrixFrame.from_blocks(blocks, _DIM, _DIM, bs)
     return _coo(ops.gemm(m, ops.transpose(m), k_chunk=2))
 
 
@@ -476,13 +412,11 @@ def la_tsqr_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from matrixinversion_spark.matrix import qr as qrmod
 
     n, k, bs = 4096, 32, 512
-    # NOT wrapped in _pinned_exec: measured WORSE with AQE off
-    # (2.18 -> 2.92 s min-of-2) — the 4096-row panel is data-sized
-    # enough that AQE's post-shuffle coalescing earns its jobs
-    # (OPTIMIZATION_r13.md, matrix family).
-    a = BlockMatrixFrame.random_uniform(
-        spark, n, m=k, block_size=bs, seed=7
-    )
+    # In the matrix session (AQE off) since TSQR's panel map and tree
+    # are data-sized: min-of-2 median 3.41 s under AQE -> 3.12 s, 11
+    # -> 4 jobs (3 alternating pairs, 4 cores; r13 measured 2.18 ->
+    # 2.92 s for AQE off with a core-sized panel, 32 cores).
+    a = BlockMatrixFrame.random_uniform(spark, n, m=k, block_size=bs, seed=7)
     a.persist()
     q, r = qrmod.tsqr(a, fanout=4)
     q.persist()
@@ -564,8 +498,8 @@ def la_randomized_svd(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_np = (rng.standard_normal((n, rank)) / np.sqrt(n)) @ (
         rng.standard_normal((rank, m)) * 10.0
     )
-    # NOT wrapped in _pinned_exec: measured WORSE with AQE off
-    # (3.87 -> 4.99 s min-of-2) — see la_tsqr_residual's note.
+    # Matrix session: 5.53 -> 5.68 s, 18 -> 6 jobs (r13: 3.87 ->
+    # 4.99 s) — see la_tsqr_residual's note.
     a = BlockMatrixFrame.from_numpy(spark, a_np, block_size=256)
     a.persist()
     u, s, vt = svdmod.randomized_svd(
@@ -603,18 +537,13 @@ def la_pinv_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     A⁺A == I_64 at the leaf scale against numpy (left inverse —
     exact for full column rank)."""
     n, m = 192, 64
-    with _pinned_exec(spark, (n // 64) * (m // 64)):
-        a = BlockMatrixFrame.random_uniform(
-            spark, n, m=m, block_size=64, seed=11
-        )
-        a.persist()
-        p = invmod.pinv(a, leaf_size=64)
-        p.persist()
-        mp_res = ops.max_abs_diff(
-            ops.multiply(a, ops.multiply(p, a)), a
-        )
-        left = ops.multiply(p, a).to_numpy()
-        left_ok = bool(np.abs(left - np.eye(m)).max() < 1e-8 * n)
+    a = BlockMatrixFrame.random_uniform(spark, n, m=m, block_size=64, seed=11)
+    a.persist()
+    p = invmod.pinv(a, leaf_size=64)
+    p.persist()
+    mp_res = ops.max_abs_diff(ops.multiply(a, ops.multiply(p, a)), a)
+    left = ops.multiply(p, a).to_numpy()
+    left_ok = bool(np.abs(left - np.eye(m)).max() < 1e-8 * n)
     return spark.createDataFrame(
         [(
             n,
@@ -662,7 +591,8 @@ def la_condition_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per step one ``ops.matvec`` of the distributed
     matrix against a driver-held vector (``_power_iterate``, as in
     la_power_iteration), so the cost at any n is 2·iters narrow
-    matvec jobs plus one full inverse.
+    matvec jobs plus one full inverse: 11.85 s under AQE -> 10.37 s
+    in the matrix session (r13: 10.75 -> 15.47 s for AQE off).
     """
     n, bs, iters = 256, 64, 14
     rng = np.random.default_rng(77)

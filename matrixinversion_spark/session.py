@@ -6,6 +6,16 @@ Here the equivalent knobs are Spark confs: AQE for runtime re-planning
 (skew joins, dynamic coalesce), a shuffle-partition count sized to the
 test harness, and Arrow for the few pandas-UDF paths.
 
+AQE is for relational queries, whose sizes are known only at run
+time. Matrix frames run in the matrix session instead
+(``matrix_session``): a child session of the caller's, sharing its
+SparkContext and cache, with AQE off. A block grid is known before
+execution, so every matrix exchange takes its partition count from
+the blocks it produces (``matrix.ops``), and a recursive inverse runs
+as one job — under AQE each exchange became a job of its own, and a
+lazy ``localCheckpoint`` ran its shuffle stages when it was built.
+The caller's session conf is never touched.
+
 Tables are read through ``read_table``, which resolves each parquet
 file set's schema once — the one Spark job of a parquet read — and
 reads it again with that schema pinned, which runs no job — as the
@@ -101,6 +111,23 @@ def get_spark(app_name: str = "matrixinversion_spark",
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# The matrix session of the live SparkContext: (context, session).
+_MATRIX: tuple | None = None
+
+
+def matrix_session(spark: SparkSession) -> SparkSession:
+    """The one matrix session of ``spark``'s SparkContext: a
+    ``newSession()`` with AQE off, built on first use and rebuilt
+    when the context changes. Passing the matrix session returns it."""
+    global _MATRIX
+    sc = spark.sparkContext
+    if _MATRIX is None or _MATRIX[0] is not sc:
+        ms = spark.newSession()
+        ms.conf.set("spark.sql.adaptive.enabled", "false")
+        _MATRIX = (sc, ms)
+    return _MATRIX[1]
 
 
 # One entry per absolute parquet path: the signature its schema was

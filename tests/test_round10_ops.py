@@ -47,8 +47,9 @@ class TestFusedInversePlanPin:
 
     def test_job_fingerprint_and_residual_2048(self, spark):
         # Exact bench geometry (bench.py INVERSE_*): N=2048, 1024
-        # blocks, leaf 1024, under bench's execution scope
-        # (``_pinned_exec``: AQE off, 8 shuffle partitions here).
+        # blocks, leaf 1024, in the matrix session (AQE off, every
+        # exchange sized from the block grid) whatever the caller's
+        # session conf.
         # The whole inverse must execute as ONE Spark job, the noop
         # write: every gemm is a routed exchange, a stage of that job.
         # A gemm built on a join ran 5 (with AQE off each small join
@@ -57,29 +58,27 @@ class TestFusedInversePlanPin:
         from matrixinversion_spark.matrix import inverse as invmod
         from matrixinversion_spark.matrix import ops
         from matrixinversion_spark.matrix.core import BlockMatrixFrame
-        from matrixinversion_spark.matrix.queries import _pinned_exec
         from matrixinversion_spark.profile import profiled
 
         n, bs, leaf = 2048, 1024, 1024
-        with _pinned_exec(spark, (n // bs) ** 2):
-            a = BlockMatrixFrame.random_uniform(
-                spark, n, block_size=bs, seed=45
-            ).persist()
-            a.df.count()
-            with profiled(spark, "fused-inverse") as p:
-                ainv = invmod.inverse(a, leaf_size=leaf)
-                ainv.df.write.format("noop").mode("overwrite").save()
-            jobs = p.jobs
-            assert jobs == 1, (
-                f"fused inverse at N={n} ran {jobs} Spark jobs "
-                "(pinned: 1) — plan shape regressed"
-            )
-            # 3e-11-class residual at N=2048 (BENCH_NOTES r9); the
-            # gate is 1e-8·N with margin for rougher conditioning.
-            err = ops.max_abs_diff_from_identity(ops.multiply(a, ainv))
-            assert err < 1e-8 * n, f"‖A·A⁻¹−I‖∞ = {err}"
-            ainv.release()
-            a.unpersist()
+        a = BlockMatrixFrame.random_uniform(
+            spark, n, block_size=bs, seed=45
+        ).persist()
+        a.df.count()
+        with profiled(spark, "fused-inverse") as p:
+            ainv = invmod.inverse(a, leaf_size=leaf)
+            ainv.df.write.format("noop").mode("overwrite").save()
+        jobs = p.jobs
+        assert jobs == 1, (
+            f"fused inverse at N={n} ran {jobs} Spark jobs "
+            "(pinned: 1) — plan shape regressed"
+        )
+        # 3e-11-class residual at N=2048 (BENCH_NOTES r9); the
+        # gate is 1e-8·N with margin for rougher conditioning.
+        err = ops.max_abs_diff_from_identity(ops.multiply(a, ainv))
+        assert err < 1e-8 * n, f"‖A·A⁻¹−I‖∞ = {err}"
+        ainv.release()
+        a.unpersist()
 
     def test_inverse_releases_intermediate_caches(self, spark):
         # ADVICE r9: repeated inversions in one session must not
